@@ -386,8 +386,8 @@ def q_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated ``tokenize`` 4× and the stopword InSet filter 2× per row
     (lambda-bearing expressions are excluded from codegen subexpression
     elimination; see the r06 plan diff), and the whole chain ran in ONE
-    task (single-row-group file). Ratio arithmetic is unchanged:
-    hits / n as an int→double IEEE division on the same two counts."""
+    task (single-row-group file). The ratio is
+    ``exprs.stopword_ratio_from_counts`` over the two staged counts."""
     docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
     toked = docs.select("doc_id", X.tokenize(F.col("text")).alias("_toks"))
     counted = toked.select(
@@ -398,9 +398,8 @@ def q_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counted.select(
         "doc_id",
         "en_hits",
-        F.when(F.col("_n") == 0, F.lit(0.0)).otherwise(
-            F.col("en_hits").cast("double") / F.col("_n").cast("double")
-        ).alias("en_ratio"),
+        X.stopword_ratio_from_counts(F.col("en_hits"), F.col("_n"))
+        .alias("en_ratio"),
     ).orderBy("doc_id")
 
 

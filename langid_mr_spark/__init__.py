@@ -22,8 +22,7 @@ Layout
 - ``queries``       analytics parity queries (driver oracle contract)
 - ``dedup``         exact / MinHash-LSH / SimHash deduplication
 - ``similarity``    embedding ANN (brute-force + LSH-bucketed)
-- ``multimodal``    image/audio/video binary columns: sniff, header decode,
-                    pixel/PCM/frame decode, resize, features
+- ``multimodal``    image/audio binary columns: sniff, pixel/PCM decode
 """
 
 __version__ = "0.1.0"

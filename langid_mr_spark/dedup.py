@@ -88,12 +88,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Column-only form over raw text (see shingles_from_tokens caveat —
-    data paths should stage the token array as a column first)."""
-    return shingles_from_tokens(X.tokenize(col), n)
-
-
 def with_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                   out_col: str = "sh") -> DataFrame:
     """(id, sh) with staged exactly-once evaluation: tokens materialize in
@@ -142,27 +136,6 @@ def _sig_from_hashes(hashes: Column, num_perm: int) -> Column:
     return F.array(*sig)
 
 
-def shingle_hashes(col: Column, n: int = 3) -> Column:
-    """Base hash per distinct shingle: md5_long(shingle) mod M."""
-    return F.transform(shingles(col, n),
-                       lambda s: md5_long(s) % F.lit(_MERSENNE))
-
-
-def minhash_signature(col: Column, num_perm: int = 32, n: int = 3) -> Column:
-    """array<bigint> minhash signature of the document's shingle set.
-
-    h_i(s) = (a_i * (md5_long(s) mod M) + b_i) mod M  (M = 2^31−1), min over
-    shingles; empty shingle set → M (sentinel larger than any hash).
-
-    Column-only form: the shingle+md5 chain is embedded once PER
-    PERMUTATION (a Column cannot alias its own subtrees, and lambda-bearing
-    expressions get no codegen subexpression elimination), i.e. 32
-    tokenize+shingle+md5 passes per document at the default num_perm. Data
-    paths should use ``with_minhash_signature`` (r06), which materializes
-    the base hashes once and derives all permutations from the attribute."""
-    return _sig_from_hashes(shingle_hashes(col, n), num_perm)
-
-
 def with_minhash_signature(df: DataFrame, id_col: str, text_col: str,
                            num_perm: int = 32, n: int = 3,
                            out_col: str = "sig") -> DataFrame:
@@ -170,9 +143,14 @@ def with_minhash_signature(df: DataFrame, id_col: str, text_col: str,
     shingles, and base hashes each materialize once as columns, so the
     num_perm affine permutations (and the per-shingle md5) scan computed
     arrays instead of re-running the whole upstream chain per element /
-    per permutation. Measured 6.5× at num_perm=8 on the signature pass
-    (sf1.0 documents) vs the Column-only form. Bit-identical to
-    ``minhash_signature``: same hashes, same affine maps."""
+    per permutation. A single Column cannot alias its own subtrees and
+    lambda-bearing expressions get no codegen subexpression elimination,
+    so an unstaged signature would embed the tokenize+shingle+md5 chain
+    once PER PERMUTATION (staging measured 6.5× at num_perm=8 on the
+    signature pass, sf1.0 documents).
+
+    h_i(s) = (a_i * (md5_long(s) mod M) + b_i) mod M  (M = 2^31−1), min over
+    shingles; empty shingle set → M (sentinel larger than any hash)."""
     sh = with_shingles(df, id_col, text_col, n)
     hashed = sh.select(
         "id",
@@ -289,7 +267,7 @@ def contamination_flags(corpus: DataFrame, eval_df: DataFrame,
     )
 
 
-# --- incremental dedup against a persistent signature store -------------------------
+# --- banded LSH index ---------------------------------------------------------------
 
 def banded_signatures(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_perm: int = 32,
@@ -329,43 +307,6 @@ def banded_signatures(df: DataFrame, id_col: str = "doc_id",
     ).select("id", "bk.band", "bk.key")
 
 
-def incremental_candidates(new_sigs: DataFrame,
-                           stored_sigs: DataFrame) -> DataFrame:
-    """Near-duplicate candidates of a NEW batch against itself and against
-    the existing corpus — without re-hashing the corpus. The stored side is
-    only ever probed on (band, key), so at 10^12 documents each incremental
-    batch costs O(batch) hashing plus one bucket-key join (bucket/partition
-    the store by `key` to make the probe shuffle-free — see bucketing.py).
-
-    Returns (id_a, id_b): old-vs-new pairs as (stored id, new id) in any id
-    order; new-vs-new pairs once with id_a < id_b. Verify with `jaccard` on
-    the candidate set.
-
-    Defense-in-depth: banded_signatures no longer emits the all-sentinel
-    (empty-shingle) rows, but a signature store WRITTEN BEFORE that guard
-    may still hold them — and one legacy sentinel bucket against a new
-    batch's sentinel rows re-creates the O(m²) blowup. Every permuted hash
-    is < _MERSENNE, so a legitimate key can never start with the sentinel
-    value; both sides are filtered on that prefix."""
-    sentinel = str(_MERSENNE)
-    new_sigs = new_sigs.filter(~F.col("key").startswith(sentinel))
-    stored_sigs = stored_sigs.filter(~F.col("key").startswith(sentinel))
-    new_a = new_sigs.select("band", "key", F.col("id").alias("id_a"))
-    new_b = new_sigs.select("band", "key", F.col("id").alias("id_b"))
-    new_vs_new = (
-        new_a.join(new_b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    stored_a = stored_sigs.select("band", "key", F.col("id").alias("id_a"))
-    old_vs_new = (
-        stored_a.join(new_b, ["band", "key"])
-        .filter(F.col("id_a") != F.col("id_b"))  # re-ingested same doc
-        .select("id_a", "id_b")
-    )
-    return new_vs_new.unionByName(old_vs_new).distinct()
-
-
 # --- winnowing fingerprints (partial-overlap / containment detection) ---------------
 
 def _gram_hashes(text: Column, k: int) -> Column:
@@ -397,29 +338,20 @@ def _winnow_from_grams(grams: Column, w: int) -> Column:
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def winnow_fingerprints(col: Column, k: int = 16, w: int = 8) -> Column:
-    """MOSS-style winnowing fingerprint set (Schleimer et al. 2003): hash
-    every k-char gram of the lowered text, keep the min hash of each
-    w-gram window, dedupe. Guarantees any shared substring of length
-    ≥ k + w − 1 shares at least one fingerprint — catching CONTAINED
-    duplication (quotes, boilerplate blocks, stitched pages) that
-    whole-document shingle Jaccard misses. md5-prefix hashing in the 31-bit
-    Mersenne space keeps the DuckDB oracle bit-identical.
-
-    Column-only form — data paths use ``with_winnow_fingerprints`` (r06),
-    which stages the lowered text and the gram-hash array as materialized
-    columns (here the gram array is embedded 3× and the lowered text
-    re-evaluates per gram position; see _gram_hashes)."""
-    text = F.lower(col)
-    return _winnow_from_grams(_gram_hashes(text, k), w)
-
-
 def with_winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
                              k: int = 16, w: int = 8,
                              out_col: str = "fps") -> DataFrame:
-    """(id, fps) with staged exactly-once evaluation (r06): lowered text,
-    gram hashes, and window minima each materialize once. Bit-identical to
-    ``winnow_fingerprints``."""
+    """(id, fps): MOSS-style winnowing fingerprint set (Schleimer et al.
+    2003) — hash every k-char gram of the lowered text, keep the min hash
+    of each w-gram window, dedupe. Guarantees any shared substring of
+    length ≥ k + w − 1 shares at least one fingerprint — catching
+    CONTAINED duplication (quotes, boilerplate blocks, stitched pages) that
+    whole-document shingle Jaccard misses. md5-prefix hashing in the 31-bit
+    Mersenne space keeps the DuckDB oracle bit-identical.
+
+    Staged exactly-once evaluation (r06): lowered text, gram hashes, and
+    window minima each materialize once (the gram array is referenced 3×
+    and the lowered text once per gram position; see _gram_hashes)."""
     lowered = df.select(F.col(id_col).alias("id"),
                         F.lower(F.col(text_col)).alias("_lt"))
     grams = lowered.select("id", _gram_hashes(F.col("_lt"), k).alias("_g"))

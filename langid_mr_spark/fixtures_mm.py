@@ -7,8 +7,8 @@ md5 of the raw pixel/PCM bytes — are computed from the ground-truth sample
 arrays at ENCODE time, never by calling the decoders. The driver's
 `binary_metadata` contract query decodes the payloads through the Spark
 `multimodal.decode_image` / `decode_audio` plumbing and the DuckDB oracle
-simply selects the expected columns, putting the ~650-LoC pure-Python
-decode path under the same hash gate as every relational operator
+simply selects the expected columns, putting the pure-Python decode
+path under the same hash gate as every relational operator
 (pattern: `gate_decisions_oracle`).
 
 Encoder provenance: minimal standalone writers of the public container

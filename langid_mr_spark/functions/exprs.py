@@ -20,9 +20,6 @@ from .. import constants as C
 
 # --- literals ----------------------------------------------------------------
 
-def _lit_array(words) -> Column:
-    # built lazily: Column construction requires an active SparkContext
-    return F.array(*[F.lit(w) for w in sorted(words)])
 _MUSIC_GLYPH_CLASS = "[" + "".join(C.MUSIC_UNICODE_MARKERS) + "]"
 # Java regex needs (?U) for unicode-aware \s (Python re is unicode by default)
 _WS = r"(?U)\s+"
@@ -56,12 +53,16 @@ def stopword_hits(tokens: Column, lang: str) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*sw)))
 
 
+def stopword_ratio_from_counts(hits: Column, n: Column) -> Column:
+    """hits / n as one int→double IEEE division; 0.0 when n == 0."""
+    return F.when(n == 0, F.lit(0.0)).otherwise(
+        hits.cast("double") / n.cast("double"))
+
+
 def stopword_ratio(tokens: Column, lang: str) -> Column:
     """twin: textnorm.compute_stopword_ratio (0.0 on empty token list)."""
-    n = F.size(tokens)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        stopword_hits(tokens, lang) / n.cast("double")
-    )
+    return stopword_ratio_from_counts(stopword_hits(tokens, lang),
+                                      F.size(tokens))
 
 
 # --- X3/X4/X5 music-only (boilerplate-only page) ------------------------------
@@ -226,17 +227,6 @@ def language_label(col: Column) -> Column:
         *[F.lit(x) for lang, lab in C.LANGUAGE_LABELS.items() for x in (lang, lab)]
     )
     return F.coalesce(F.element_at(mapping, F.lower(col)), F.initcap(col))
-
-
-# --- X14 mean logprob with sentinel ----------------------------------------------
-
-def mean_logprob(arr: Column) -> Column:
-    """lang_gate.py:244-245 — mean of array; −99.0 when empty/null."""
-    return F.when(
-        arr.isNull() | (F.size(arr) == 0), F.lit(C.EMPTY_LOGPROB_SENTINEL)
-    ).otherwise(
-        F.aggregate(arr, F.lit(0.0), lambda a, x: a + x) / F.size(arr)
-    )
 
 
 # --- X15 argmax over {en, fr} (ties → en: Python max() insertion order) -----------

@@ -25,10 +25,13 @@ struct<ppl_en,ppl_fr>) to replace the real pandas UDFs in tests.
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from . import constants as C
@@ -79,24 +82,20 @@ def with_pass1(df: DataFrame, text_col: str = "text",
         .withColumn("_s1", scorer(F.col(probe_col)))
         .withColumn("_lang1", F.col("_s1.lang"))
         .withColumn("_p1", X.safe_probability(F.col("_s1.prob")))
-        .withColumn("_err1", _scorer_error(out, "_s1", scorer, probe_col))
+        .withColumn("_err1", _scorer_error("_s1", scorer))
         .drop("_s1", "_tokens")
     )
     return out
 
 
-def _scorer_error(df: DataFrame, struct_col: str, scorer: Scorer,
-                  probe_col: str) -> Column:
+def _scorer_error(struct_col: str, scorer: Scorer) -> Column:
     """Poison-row capture (D5, runner.py:192-199): the production scoring
-    UDFs carry a per-row ``error`` field; injected test scorers may not —
-    absence means 'cannot fail'."""
-    fields = scorer(F.col(probe_col))
-    try:
-        names = df.select(fields.alias("_probe_struct")).schema[
-            "_probe_struct"].dataType.fieldNames()
-    except Exception:
-        names = []
-    if "error" in names:
+    UDFs (``scoring.make_*_udf``) declare a per-row ``error`` field in
+    their ``returnType``; injected native-struct scorers have no return
+    type and cannot fail. Reading the declared type keeps plan analysis
+    out of the per-pass build."""
+    rtype = getattr(scorer, "returnType", None)
+    if isinstance(rtype, T.StructType) and "error" in rtype.fieldNames():
         return F.col(f"{struct_col}.error")
     return F.lit(None).cast("string")
 
@@ -228,6 +227,36 @@ def _emit_pass3(df: DataFrame, strict: bool) -> DataFrame:
     )
 
 
+# Stages apply_gate persists inside the current ``released_persists()``
+# block; a context variable, so concurrent runs on other threads keep
+# their own.
+_held: ContextVar[list[DataFrame] | None] = ContextVar(
+    "gate_held_persists", default=None)
+
+
+@contextmanager
+def released_persists() -> Iterator[None]:
+    """Unpersist, on exit, every cascade stage ``apply_gate`` persists
+    inside the block — the caller's jobs over those stages must finish
+    inside it."""
+    held: list[DataFrame] = []
+    token = _held.set(held)
+    try:
+        yield
+    finally:
+        _held.reset(token)
+        for df in held:
+            df.unpersist()
+
+
+def _persist(df: DataFrame, level: StorageLevel) -> DataFrame:
+    df = df.persist(level)
+    held = _held.get()
+    if held is not None:
+        held.append(df)
+    return df
+
+
 def apply_gate(
     df: DataFrame,
     text_col: str = "text",
@@ -255,7 +284,7 @@ def apply_gate(
     scored1 = (with_pass1(df, text_col, scorer, text_is_probe)
                .withColumn("_d1", _decision1()))
     if persist_level is not None:
-        scored1 = scored1.persist(persist_level)
+        scored1 = _persist(scored1, persist_level)
     # poison rows are decided rows (decision='error'): exactly TWO consumers
     # of the persisted stage, same as the error-free round-1 design
     decided1 = _emit_pass1(scored1.filter(
@@ -272,8 +301,7 @@ def apply_gate(
         .withColumn("_s2", scorer2(F.col("_cleaned")))
         .withColumn("_lang2", F.col("_s2.lang"))
         .withColumn("_p2", X.safe_probability(F.col("_s2.prob")))
-        .withColumn("_err2", _scorer_error(undecided1, "_s2", scorer2,
-                                           probe_col))
+        .withColumn("_err2", _scorer_error("_s2", scorer2))
         .withColumn(
             "_d2",
             F.col("_music2")
@@ -281,7 +309,7 @@ def apply_gate(
         )
     )
     if persist_level is not None:
-        scored2 = scored2.persist(persist_level)
+        scored2 = _persist(scored2, persist_level)
     decided2 = _emit_pass2(scored2.filter(
         F.col("_err2").isNotNull() | F.col("_d2")))
 
@@ -292,8 +320,7 @@ def apply_gate(
         # Fallback scores the PROBE, not the cleaned text (lang_gate.py:535)
         scored3 = (
             undecided2.withColumn("_ppl", ppl_scorer(F.col(probe_col)))
-            .withColumn("_err3", _scorer_error(undecided2, "_ppl",
-                                               ppl_scorer, probe_col))
+            .withColumn("_err3", _scorer_error("_ppl", ppl_scorer))
         )
         decided3 = _emit_pass3(scored3, strict=False)
 

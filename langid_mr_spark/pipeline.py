@@ -26,6 +26,7 @@ Scale notes (100 TB / 1000-executor design):
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -39,6 +40,9 @@ from . import scrub as SCRUB
 from .functions import exprs as X
 
 # --- session -----------------------------------------------------------------
+
+_COLLAPSE_PROJECT = "org.apache.spark.sql.catalyst.optimizer.CollapseProject"
+
 
 def session(app: str = "langid_mr_spark", master: str | None = None,
             shuffle_partitions: int = 32, arrow_batch: int = 2048,
@@ -93,30 +97,11 @@ def session(app: str = "langid_mr_spark", master: str | None = None,
         if open_cost_bytes:
             b = b.config("spark.sql.files.openCostInBytes", open_cost_bytes)
         else:
-            units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-            s = str(max_partition_bytes).strip().lower()
-            mult = units.get(s[-1], 1)
-            nbytes = int(float(s[:-1] if s[-1] in units else s)) * mult
+            nbytes = _size_bytes(max_partition_bytes)
             b = b.config("spark.sql.files.openCostInBytes",
                          str(max(nbytes // 16, 64 * 1024)))
-    return (
+    spark = (
         b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # r06: CollapseProject re-merges the engine's staged projections
-        # around Python-UDF extraction and inlines every alias into every
-        # consumer — and expressions containing lambda variables are
-        # excluded from codegen subexpression elimination, so each inlined
-        # reference re-evaluates the whole subtree at runtime. For this
-        # engine's expression library (tokenize/HOF/regex chains) that
-        # meant the pass-1 plan re-tokenized each document up to 10× and
-        # carried 5 copies of the bracket-strip chain (see
-        # OPTIMIZATION_r06.md, plans/r06/). Excluding the rule keeps the
-        # deliberate exactly-once staging; adjacent Projects still fuse
-        # inside one WholeStageCodegen function, so plan depth costs
-        # nothing at runtime. Measured: bench pipeline 20.0 s → 14.5 s
-        # (paired ABAB, sf1.0 local[32]); no query's results change (the
-        # rule is a pure plan rewrite).
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer.CollapseProject")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -127,6 +112,35 @@ def session(app: str = "langid_mr_spark", master: str | None = None,
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .getOrCreate()
     )
+    # r06: CollapseProject re-merges the engine's staged projections
+    # around Python-UDF extraction and inlines every alias into every
+    # consumer — and expressions containing lambda variables are
+    # excluded from codegen subexpression elimination, so each inlined
+    # reference re-evaluates the whole subtree at runtime. For this
+    # engine's expression library (tokenize/HOF/regex chains) that
+    # meant the pass-1 plan re-tokenized each document up to 10× and
+    # carried 5 copies of the bracket-strip chain (see
+    # OPTIMIZATION_r06.md, plans/r06/). Excluding the rule keeps the
+    # deliberate exactly-once staging; adjacent Projects still fuse
+    # inside one WholeStageCodegen function, so plan depth costs
+    # nothing at runtime. Measured: bench pipeline 20.0 s → 14.5 s
+    # (paired ABAB, sf1.0 local[32]); no query's results change (the
+    # rule is a pure plan rewrite). Appended to any exclusions the
+    # deployment already sets, never replacing them.
+    key = "spark.sql.optimizer.excludedRules"
+    rules = [r for r in (spark.conf.get(key, None) or "").split(",")
+             if r.strip()]
+    if _COLLAPSE_PROJECT not in rules:
+        spark.conf.set(key, ",".join(rules + [_COLLAPSE_PROJECT]))
+    return spark
+
+
+def _size_bytes(size: str) -> int:
+    """Spark byte-size string ("8m", "128mb", "64MB", "1048576") → bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", str(size).strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark byte-size string: {size!r}")
+    return int(m[1]) << (10 * " kmgtp".index(m[2] or " "))
 
 
 # --- S4: html → text extraction (vectorized Arrow UDF) -------------------------
@@ -442,24 +456,6 @@ def run_pipeline(
     )
 
 
-# --- X12: language-code rewrite over the typed output -------------------------------
-
-def rewrite_language_codes(df: DataFrame, fmt: str) -> DataFrame:
-    """X12 (main.py:662-679): the reference walks arbitrary JSON rewriting
-    every "language" key; with a typed schema the rewrite is finite —
-    withField on the known struct paths. Unknown codes pass through
-    (languages.py:44-47)."""
-    return (
-        df.withColumn("language", X.to_iso_code(F.col("language"), fmt))
-        .withColumn(
-            "score_meta",
-            F.col("score_meta").withField(
-                "language", X.to_iso_code(F.col("score_meta.language"), fmt)
-            ),
-        )
-    )
-
-
 # --- D1: salted repartition --------------------------------------------------------
 
 def salted_repartition(df: DataFrame, n: int, key: str = "url",
@@ -610,25 +606,27 @@ def run_resumable(
     if not pending:
         return []
 
-    out = with_dt(run_pipeline(src, **pipeline_kwargs))
-    if repartition_n:
-        out = salted_repartition(out, repartition_n, cluster_cols=["dt"])
+    # the cascade's persisted stages are released once every write is done
+    with gate.released_persists():
+        out = with_dt(run_pipeline(src, **pipeline_kwargs))
+        if repartition_n:
+            out = salted_repartition(out, repartition_n, cluster_cols=["dt"])
 
-    out, obs = observed(out)
-    (out.write.mode("overwrite").partitionBy("dt").parquet(output_path))
+        out, obs = observed(out)
+        (out.write.mode("overwrite").partitionBy("dt").parquet(output_path))
 
-    final = with_dt(spark.read.parquet(output_path)).filter(
-        F.col("dt").isin(*pending)
-    )
-    # dynamic partition overwrite keyed by dt: a crash between this write
-    # and the checkpoint append must not duplicate metrics on resume —
-    # re-processing a partition REPLACES its metrics rows (exactly-once
-    # lineage, SURVEY §4.2(c))
-    (metrics_table(final, run_id).write.mode("overwrite")
-     .partitionBy("dt").parquet(metrics_path))
+        final = with_dt(spark.read.parquet(output_path)).filter(
+            F.col("dt").isin(*pending)
+        )
+        # dynamic partition overwrite keyed by dt: a crash between this write
+        # and the checkpoint append must not duplicate metrics on resume —
+        # re-processing a partition REPLACES its metrics rows (exactly-once
+        # lineage, SURVEY §4.2(c))
+        (metrics_table(final, run_id).write.mode("overwrite")
+         .partitionBy("dt").parquet(metrics_path))
 
-    ckpt = spark.createDataFrame(
-        [(run_id, d) for d in sorted(pending)], "run_id string, dt string"
-    ).withColumn("observed", F.lit(str(obs.get)))
-    ckpt.write.mode("append").parquet(checkpoints_path)
+        ckpt = spark.createDataFrame(
+            [(run_id, d) for d in sorted(pending)], "run_id string, dt string"
+        ).withColumn("observed", F.lit(str(obs.get)))
+        ckpt.write.mode("append").parquet(checkpoints_path)
     return sorted(pending)

@@ -61,18 +61,6 @@ def _metric_exprs(text: Column, tokens: Column) -> dict[str, Column]:
     }
 
 
-def quality_columns(text: Column) -> dict[str, Column]:
-    """The five metric columns, shared by the pass/fail projection.
-
-    Column-only form: ``tokenize`` is inlined into every metric, so each
-    reference re-splits the text (lambda-bearing expressions are excluded
-    from codegen subexpression elimination). Fine for tests and tiny
-    inputs; data paths should use ``with_quality`` (r06), which stages the
-    token array and each metric into materialized columns for exactly-once
-    evaluation."""
-    return _metric_exprs(text, X.tokenize(text))
-
-
 def _fail_reason_from(m: dict[str, Column]) -> Column:
     return (
         F.when(m["n_words"] < MIN_WORDS, REASONS[0])
@@ -83,15 +71,6 @@ def _fail_reason_from(m: dict[str, Column]) -> Column:
         .when(m["dup_token_ratio"] > MAX_DUP_TOKEN_RATIO, REASONS[4])
         .when(m["stopword_density"] < MIN_STOPWORD_DENSITY, REASONS[5])
     )
-
-
-def quality_fail_reason(text: Column) -> Column:
-    """First failed rule in priority order; NULL = passes all rules.
-
-    Column-only form (see ``quality_columns`` caveat): the when-chain
-    references ``n_words``/``mean_word_len`` twice each, so a passing
-    document re-tokenizes the text ~10×. Data paths use ``with_quality``."""
-    return _fail_reason_from(quality_columns(text))
 
 
 # column names produced by with_quality(..., keep_metrics=True), in order
@@ -108,13 +87,11 @@ def with_quality(df, text_col: str, out_col: str = "quality_fail_reason",
     metrics over that array, (3) the priority when-chain over the metric
     attributes. Each stage's aliases are non-cheap and referenced more than
     once downstream, so CollapseProject cannot inline them back — the plan
-    keeps three Projects and every subtree evaluates once per row. The
-    inlined Column form re-evaluated ``tokenize`` at nearly every metric
-    reference (no subexpression elimination through lambda variables):
-    ~10 splits + 4 token-array HOF passes per passing document
-    (quality_flags, which also emits the metric columns, ran 13× faster
-    staged+spread at sf1.0: 16.2 s → 1.2 s). Same expressions, same
-    priority order — results are bit-identical."""
+    keeps three Projects and every subtree evaluates once per row.
+    Lambda-bearing expressions get no codegen subexpression elimination, so
+    an inlined ``tokenize`` would re-split the text at nearly every metric
+    reference: ~10 splits + 4 token-array HOF passes per passing document
+    (staging made quality_flags 13× faster at sf1.0: 16.2 s → 1.2 s)."""
     base = list(df.columns)
     text = F.col(text_col)
     toked = df.select("*", X.tokenize(text).alias("_q_toks"))

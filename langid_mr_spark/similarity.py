@@ -25,33 +25,9 @@ def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-summation dot product (bit-identical to DuckDB
-    list_dot_product on DOUBLE[])."""
-    return F.aggregate(
-        F.zip_with(_to_double(a), _to_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Column-only form: ``d`` is referenced twice (zero-guard + divisor),
-    so each pair computes 5 dot products (dot(a,a) ×2, dot(b,b) ×2,
-    dot(a,b)) — and norms are per-VECTOR quantities recomputed per PAIR.
-    Data paths stage per-side doubled vectors + norms once per row and
-    score with ``_cosine_staged`` (r06); results are bit-identical (same
-    IEEE ops, evaluated once)."""
-    d = norm(a) * norm(b)
-    return F.when(d == 0, F.lit(0.0)).otherwise(dot(a, b) / d)
-
-
 def _dot_doubled(a: Column, b: Column) -> Column:
-    """Sequential-summation dot over already-double arrays."""
+    """Sequential-summation dot product over already-double arrays
+    (bit-identical to DuckDB list_dot_product on DOUBLE[])."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -69,8 +45,10 @@ def _with_doubled(df: DataFrame, vec_col: str, d_col: str,
 
 
 def _cosine_staged(da: Column, db: Column, na: Column, nb: Column) -> Column:
-    """cosine() over pre-doubled arrays and pre-computed norms — the same
-    expressions as ``cosine``, each evaluated exactly once."""
+    """Cosine over pre-doubled arrays and pre-computed norms. Staged
+    because ``d`` is referenced twice (zero-guard + divisor) and norms are
+    per-VECTOR quantities: inlined, each pair would compute 5 dot products
+    (r06)."""
     d = na * nb
     return F.when(d == 0, F.lit(0.0)).otherwise(_dot_doubled(da, db) / d)
 
@@ -82,8 +60,7 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     against the vector table, rank per query. The big side is never
     shuffled — only the per-query top-k aggregation moves data."""
     # r06: doubled copies and norms are per-VECTOR quantities — staged once
-    # per row on each side instead of recomputed per (query, vector) pair
-    # (the Column-only cosine() evaluated 5 dot products per pair).
+    # per row on each side instead of recomputed per (query, vector) pair.
     v2 = _with_doubled(vectors.select(id_col, vec_col), vec_col,
                        "_vd", "_vn")
     q2 = _with_doubled(queries, qvec_col, "_qd", "_qn")
@@ -177,8 +154,8 @@ def lsh_bucket_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
 def _score_pairs(joined: DataFrame, qid_col: str, id_col: str,
                  vec_col: str, qvec_col: str) -> DataFrame:
     """(qid, id, sim) with staged exactly-once cosine (r06): doubled
-    copies, then norms, then the similarity — the Column-only cosine()
-    evaluated 5 dot products and up to 5 float64 conversions per pair."""
+    copies, then norms, then the similarity — inlined, each pair would
+    pay 5 dot products and up to 5 float64 conversions."""
     doubled = joined.select(
         F.col(qid_col), F.col(id_col),
         _to_double(F.col(vec_col)).alias("_vd"),
@@ -389,7 +366,7 @@ def lsh_near_dup_pairs(vectors: DataFrame, threshold: float = 0.45,
         .join(v.withColumnsRenamed({"_vid": "id_b", "_v": "_vb"}), "id_b")
     )
     # r06: stage doubled copies and norms per candidate pair (exactly-once;
-    # the Column-only cosine() re-doubled each side up to 5× per pair).
+    # inlined, each side would be re-doubled up to 5× per pair).
     # Staged AFTER the join so the shuffled rows still carry float32
     # arrays, not the 2×-sized float64 copies.
     doubled = joined.select(

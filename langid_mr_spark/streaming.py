@@ -177,19 +177,3 @@ def make_dedup_group(id_col: str, ttl_ms: int | None):
         yield rows
 
     return dedup_group
-
-
-def windowed_throughput(spark: SparkSession, output_dir: str,
-                        window: str = "5 minutes") -> DataFrame:
-    """A3 analog (main.py:270-280): docs per tumbling event-time window of
-    the processed output — the dashboard's freshness metric."""
-    out = spark.read.parquet(output_dir)
-    return (
-        out.groupBy(F.window(F.col("warc_ts"), window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.count(F.when(F.col("keep"), 1)).alias("kept"),
-        )
-        .select(F.col("w.start").alias("window_start"), "docs", "kept")
-        .orderBy("window_start")
-    )

@@ -345,10 +345,11 @@ def _steal_pct(a: list[int], b: list[int]) -> float:
     return round(100.0 * d[7] / total, 2)  # idx 7 = steal
 
 
-def measure(cpus: int, corpus_path: str) -> list[tuple[float, ...]]:
+def measure(cpus: int, corpus_path: str) -> dict[str, object]:
     """One session at `cpus`: warmup, then RUNS_PER_LEVEL timed runs.
-    Returns every sample as (elapsed, steal_pct, probe_ratio,
-    wide_probe_ratio, load1, probe_ms, wide_ms) — the interference
+    Returns ``{"cores": pinned core ids, "vals": samples}``, every sample
+    as (elapsed, steal_pct, probe_ratio, wide_probe_ratio, load1,
+    probe_ms, wide_ms) — the interference
     signals read at each sample's admission document co-tenant
     contention per sample; the raw ms let ratios be recomputed against
     any floor at report time (calibration is frozen, never drifted).

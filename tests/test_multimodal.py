@@ -1,4 +1,6 @@
-"""Multimodal binary-column plumbing: sniffing, feature UDF shape, stub."""
+"""Multimodal binary-column plumbing: sniffing, pixel/PCM decode, stubs."""
+
+import struct as _S
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,32 +24,9 @@ def frame(spark):
 
 
 def test_sniff_format(frame):
-    got = {r["id"]: r["meta"]["format"]
-           for r in MM.with_metadata(frame).collect()}
+    got = {r["id"]: r["kind"] for r in frame.select(
+        "id", MM.sniff_format(F.col("payload")).alias("kind")).collect()}
     assert got == WANT
-
-
-def test_metadata_sizes(frame):
-    got = {r["id"]: r["meta"]["size_bytes"]
-           for r in MM.with_metadata(frame).collect()}
-    for i, payload in PAYLOADS:
-        assert got[i] == (len(payload) if payload is not None else None)
-
-
-def test_extract_features_shape_and_determinism(frame):
-    out1 = {r["id"]: r["features"] for r in MM.extract_features(frame).collect()}
-    out2 = {r["id"]: r["features"] for r in MM.extract_features(frame).collect()}
-    assert out1 == out2
-    for i, payload in PAYLOADS:
-        vec = out1[i]
-        assert len(vec) == MM.FEATURE_DIM
-        if payload:
-            assert sum(vec) == pytest.approx(1.0)
-        else:
-            assert vec == [0.0] * MM.FEATURE_DIM
-    # python twin agrees
-    for i, payload in PAYLOADS:
-        assert out1[i] == pytest.approx(MM.fake_features(payload))
 
 
 # --- real pixel decode (golden bytes) ---------------------------------------
@@ -191,76 +170,6 @@ def test_decode_image_dataframe_mixed(spark):
     assert len(got) == 6  # no dead tasks
 
 
-# --- real container-header decode -------------------------------------------
-
-import struct as _S
-
-from langid_mr_spark.multimodal import decode_header, decode_headers
-
-
-def _png(w=640, h=480, depth=8, color=2):
-    ihdr = _S.pack(">II", w, h) + bytes([depth, color, 0, 0, 0])
-    return (b"\x89PNG\r\n\x1a\n" + _S.pack(">I", 13) + b"IHDR" + ihdr
-            + b"\x00" * 4)
-
-
-def _jpeg(w=320, h=200, ncomp=3):
-    app0 = b"\xff\xe0" + _S.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (b"\xff\xc0" + _S.pack(">H", 8 + 3 * ncomp) + b"\x08"
-            + _S.pack(">HH", h, w) + bytes([ncomp]) + b"\x00" * (3 * ncomp))
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _gif(w=12, h=34):
-    return b"GIF89a" + _S.pack("<HH", w, h) + b"\x00" * 3
-
-
-def _wav(channels=2, rate=44100, bits=16):
-    fmt = _S.pack("<HHIIHH", 1, channels, rate, rate * channels * bits // 8,
-                  channels * bits // 8, bits)
-    return (b"RIFF" + _S.pack("<I", 36) + b"WAVE"
-            + b"fmt " + _S.pack("<I", 16) + fmt
-            + b"data" + _S.pack("<I", 0))
-
-
-def test_decode_header_png_jpeg_gif_wav():
-    png = decode_header(_png(1920, 1080, depth=8, color=6))
-    assert (png["kind"], png["width"], png["height"],
-            png["channels"], png["bit_depth"]) == ("png", 1920, 1080, 4, 8)
-    jpg = decode_header(_jpeg(320, 200))
-    assert (jpg["kind"], jpg["width"], jpg["height"],
-            jpg["channels"]) == ("jpeg", 320, 200, 3)
-    gif = decode_header(_gif(12, 34))
-    assert (gif["kind"], gif["width"], gif["height"]) == ("gif", 12, 34)
-    wav = decode_header(_wav(1, 16000, 16))
-    assert (wav["kind"], wav["channels"], wav["sample_rate"],
-            wav["bit_depth"]) == ("wav", 1, 16000, 16)
-
-
-def test_decode_header_poison_is_error_not_raise():
-    assert decode_header(None)["error"] == "empty payload"
-    assert decode_header(b"")["error"] == "empty payload"
-    assert decode_header(b"plain text")["error"] == "unknown container"
-    truncated = _png()[:14]  # magic ok, IHDR cut off
-    assert decode_header(truncated)["error"] is not None
-    desync = b"\xff\xd8\xff" + b"\x00" * 8  # JPEG magic, garbage markers
-    assert decode_header(desync)["error"] is not None
-
-
-def test_decode_headers_dataframe(spark):
-    rows = [(1, _png(64, 32)), (2, _wav(2, 48000, 24)),
-            (3, b"not media"), (4, _jpeg(10, 20)), (5, None)]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r["id"]: r for r in
-           decode_headers(df).orderBy("id").collect()}
-    assert got[1]["kind"] == "png" and got[1]["width"] == 64
-    assert got[2]["sample_rate"] == 48000 and got[2]["bit_depth"] == 24
-    assert got[3]["kind"] is None and got[3]["header_error"]
-    assert got[4]["height"] == 20
-    assert got[5]["header_error"] == "empty payload"
-    assert len(got) == 5  # poison rows survive as rows
-
-
 # --- GIF pixel decode (real LZW) ---------------------------------------------
 
 def _lzw_encode(indices, min_code):
@@ -397,8 +306,7 @@ def test_png_palette_index_out_of_range_is_error_row(spark):
     assert "palette index out of range" in row["decode_error"]
 
 
-# --- resize / audio decode / frame sampling ----------------------------------
-
+# --- audio decode ------------------------------------------------------------
 
 def _wav_full(samples, channels=1, rate=8000, bits=16):
     """Full RIFF/WAVE with real PCM data. ``samples`` is a flat interleaved
@@ -413,51 +321,6 @@ def _wav_full(samples, channels=1, rate=8000, bits=16):
             + b"fmt " + _S.pack("<I", 16) + fmt
             + b"data" + _S.pack("<I", len(data)) + data)
 
-
-def _y4m(frames_y, w, h, fps=(25, 1), chroma=b"420"):
-    """YUV4MPEG2 stream: each frames_y entry is w*h luma bytes; chroma
-    planes are zero-filled at the mode's subsampling."""
-    extra = {b"420": w * h // 2, b"422": w * h, b"444": w * h * 2,
-             b"mono": 0}.get(chroma, 0)
-    head = b"YUV4MPEG2 W%d H%d F%d:%d C%s\n" % (w, h, *fps, chroma)
-    return head + b"".join(
-        b"FRAME\n" + y + b"\x00" * extra for y in frames_y)
-
-
-def test_resize_pixels_nearest_golden():
-    # 2x2 RGB: R G / B W → 4x4 duplicates each source pixel into a 2x2 block
-    px = bytes((255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255))
-    out = MM.resize_pixels(px, 2, 2, 3, 4, 4)
-    want_rows = [
-        (255, 0, 0) * 2 + (0, 255, 0) * 2,
-        (255, 0, 0) * 2 + (0, 255, 0) * 2,
-        (0, 0, 255) * 2 + (255, 255, 255) * 2,
-        (0, 0, 255) * 2 + (255, 255, 255) * 2,
-    ]
-    assert out == b"".join(bytes(r) for r in want_rows)
-    # downscale 4x4 → 2x2 picks source pixels (0,0),(0,2),(2,0),(2,2)
-    back = MM.resize_pixels(out, 4, 4, 3, 2, 2)
-    assert back == px
-    with pytest.raises(ValueError, match="length mismatch"):
-        MM.resize_pixels(px, 3, 3, 3, 2, 2)
-    with pytest.raises(ValueError, match="non-positive"):
-        MM.resize_pixels(px, 2, 2, 3, 0, 2)
-
-
-def test_resize_images_dataframe(spark):
-    w, h = 4, 2
-    ppm = b"P6\n%d %d\n255\n" % (w, h) + bytes(range(w * h * 3))
-    rows = [(0, ppm), (1, b"\xff\xd8\xff jpeg"), (2, None)]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r["id"]: r for r in
-           MM.resize_images(df, 2, 2).orderBy("id").collect()}
-    assert (got[0]["width"], got[0]["height"], got[0]["channels"]) == (2, 2, 3)
-    src = bytes(range(w * h * 3))
-    want = (src[0:3] + src[6:9]          # row 0: x=0,2
-            + src[12:15] + src[18:21])   # row 1 (y=1): x=0,2
-    assert bytes(got[0]["pixels"]) == want
-    assert got[1]["pixels"] is None and "JPEG" in got[1]["decode_error"]
-    assert got[2]["decode_error"] is not None  # poison, not a dead task
 
 
 def test_wav_samples_16_and_8_bit():
@@ -474,83 +337,19 @@ def test_wav_samples_16_and_8_bit():
         MM._wav_samples(bad)
 
 
-def test_resample_linear_halves_and_doubles():
-    import numpy as np
-
-    x = np.arange(8, dtype=np.float64).reshape(-1, 1)
-    down = MM.resample_linear(x, 8000, 4000)
-    assert down[:, 0].tolist() == [0.0, 2.0, 4.0, 6.0]
-    up = MM.resample_linear(x, 8000, 16000)
-    assert up.shape == (16, 1)
-    assert up[:4, 0].tolist() == [0.0, 0.5, 1.0, 1.5]
-    same = MM.resample_linear(x, 8000, 8000)
-    assert same is x
-
-
 def test_decode_audio_dataframe(spark):
-    # 100 frames of silence then 100 of full-scale square wave @ 8 kHz
+    # 100 frames of silence then 100 of half-scale square wave @ 8 kHz
     loud = [0x4000 if i % 2 else -0x4000 for i in range(100)]
     wav = _wav_full([0] * 100 + loud, 1, 8000)
     rows = [(0, wav), (1, b"RIFF????WAVEjunk"), (2, None)]
     df = spark.createDataFrame(rows, "id long, payload binary")
     got = {r["id"]: r for r in
-           MM.decode_audio(df, window_ms=10).orderBy("id").collect()}
+           MM.decode_audio(df).orderBy("id").collect()}
     ok = got[0]
     assert (ok["sample_rate"], ok["channels"], ok["n_frames"]) == (8000, 1, 200)
-    assert ok["duration_s"] == pytest.approx(0.025)
-    assert ok["rms"] == pytest.approx((0.25 / 2) ** 0.5, rel=1e-6)
-    # 10 ms windows @8kHz = 80 frames/window → 2 full windows: 1 silent
-    assert ok["silence_ratio"] == pytest.approx(0.5)
-    assert len(bytes(ok["pcm"])) == 400  # int16 out
+    assert bytes(ok["pcm"]) == wav[-400:]  # int16 out == the data chunk
     assert got[1]["decode_error"] is not None
     assert got[2]["decode_error"] is not None
-
-
-def test_decode_audio_resamples_to_target_rate(spark):
-    wav = _wav_full(list(range(0, 8000, 100)) * 2, 1, 16000)  # 160 frames
-    df = spark.createDataFrame([(0, wav)], "id long, payload binary")
-    row = MM.decode_audio(df, target_rate=8000).collect()[0]
-    assert row["sample_rate"] == 8000
-    assert row["n_frames"] == 80
-    assert row["duration_s"] == pytest.approx(0.01)
-
-
-def test_y4m_frames_modes_and_errors():
-    y0, y1 = bytes(range(6)) * 1, bytes(range(6, 12))
-    w, h = 3, 2
-    wid, hei, fps, frames = MM._y4m_frames(_y4m([y0, y1], w, h))
-    assert (wid, hei, fps) == (3, 2, 25.0)
-    assert frames == [y0, y1]
-    _, _, _, f444 = MM._y4m_frames(_y4m([y0], w, h, chroma=b"444"))
-    assert f444 == [y0]
-    _, _, _, fmono = MM._y4m_frames(_y4m([y0], w, h, chroma=b"mono"))
-    assert fmono == [y0]
-    with pytest.raises(ValueError, match="truncated y4m frame"):
-        MM._y4m_frames(_y4m([y0], w, h)[:-4])
-    with pytest.raises(NotImplementedError, match="chroma"):
-        MM._y4m_frames(_y4m([y0], w, h, chroma=b"411"))
-
-
-def test_sample_frames_dataframe_explodes_and_drops_payload(spark):
-    w, h = 4, 2
-    frames = [bytes([i] * (w * h)) for i in range(10)]
-    rows = [(0, _y4m(frames, w, h)),
-            (1, b"\x00\x00\x00\x18ftypisom rest"),   # MP4: poison
-            (2, None)]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = MM.sample_frames(df, every_k=3, max_frames=3).orderBy(
-        "id", "frame_idx").collect()
-    assert "payload" not in out[0].asDict()  # binary NOT re-carried per frame
-    sampled = [r for r in out if r["id"] == 0]
-    assert [r["frame_idx"] for r in sampled] == [0, 3, 6]  # every 3rd, cap 3
-    assert all(r["n_frames_total"] == 10 and r["fps"] == 25.0
-               and (r["width"], r["height"], r["channels"]) == (w, h, 1)
-               for r in sampled)
-    assert bytes(sampled[1]["pixels"]) == frames[3]
-    poison = {r["id"]: r for r in out if r["id"] != 0}
-    assert "MP4" in poison[1]["decode_error"]
-    assert poison[1]["frame_idx"] is None
-    assert poison[2]["decode_error"] is not None
 
 
 # --- property tests (pure Python, no Spark) ----------------------------------
@@ -573,166 +372,12 @@ def test_wav_roundtrip_property(samples, channels, rate):
     assert flat == samples
 
 
-@given(w=st.integers(1, 8), h=st.integers(1, 8), nch=st.sampled_from([1, 3]),
-       ow=st.integers(1, 8), oh=st.integers(1, 8),
-       data=st.data())
-@settings(max_examples=50, deadline=None)
-def test_resize_property(w, h, nch, ow, oh, data):
-    """Identity at same size; every output pixel exists in the source;
-    output length is exactly ow*oh*nch."""
-    px = bytes(data.draw(st.lists(st.integers(0, 255), min_size=w * h * nch,
-                                  max_size=w * h * nch)))
-    out = MM.resize_pixels(px, w, h, nch, ow, oh)
-    assert len(out) == ow * oh * nch
-    if (ow, oh) == (w, h):
-        assert out == px
-    src_px = {px[i:i + nch] for i in range(0, len(px), nch)}
-    assert all(out[i:i + nch] in src_px for i in range(0, len(out), nch))
-
-
-@given(n=st.integers(0, 6), w=st.integers(1, 6), h=st.integers(1, 6),
-       k=st.integers(1, 4),
-       chroma=st.sampled_from([b"420", b"422", b"444", b"mono"]),
-       data=st.data())
-@settings(max_examples=50, deadline=None)
-def test_y4m_property(n, w, h, k, chroma, data):
-    """Parse recovers every frame byte-exactly in order for all chroma
-    modes; every-k sampling indices are 0, k, 2k, ..."""
-    frames = [bytes(data.draw(st.lists(st.integers(0, 255),
-                                       min_size=w * h, max_size=w * h)))
-              for _ in range(n)]
-    wid, hei, _, got = MM._y4m_frames(_y4m(frames, w, h, chroma=chroma))
-    assert (wid, hei) == (w, h)
-    assert got == frames
-    assert list(range(0, n, k)) == [i for i in range(0, len(got), k)]
-
-
-def test_decode_header_mp3():
-    # bare frame: MPEG1 Layer III, 44100 Hz, stereo (sync FF FB 90 00)
-    bare = bytes((0xFF, 0xFB, 0x90, 0x00)) + b"\x00" * 16
-    got = decode_header(bare)
-    assert (got["kind"], got["sample_rate"], got["channels"]) \
-        == ("mp3", 44100, 2)
-    # ID3v2-prefixed (syncsafe size 5), mono MPEG2 @ 16 kHz
-    frame = bytes((0xFF, 0xF3, 0x98, 0xC0))  # ver=2, III, sr_idx=2, mono
-    tagged = b"ID3\x04\x00\x00\x00\x00\x00\x05" + b"\x00" * 5 + frame
-    got = decode_header(tagged)
-    assert (got["kind"], got["sample_rate"], got["channels"]) \
-        == ("mp3", 16000, 1)
-    # ID3 with no sync after it → poison, not a raise
-    assert decode_header(b"ID3\x04\x00\x00\x00\x00\x00\x00")["error"]
-
-
-# --- animated GIF frame walk -------------------------------------------------
-
-
-def _agif(sw, sh, palette, items, min_code=2, bg=0):
-    """GIF89a animation encoder for golden tests: each item is a dict with
-    w/h/indices and optional left/top/delay/disposal/transparent."""
-    out = bytearray(b"GIF89a")
-    out += _S.pack("<HHBBB", sw, sh, 0x80 | (min_code - 1), bg, 0)
-    out += palette
-    for it in items:
-        tr = it.get("transparent")
-        flags = (it.get("disposal", 0) << 2) | (1 if tr is not None else 0)
-        out += (b"\x21\xf9\x04" + bytes([flags])
-                + _S.pack("<H", it.get("delay", 0))
-                + bytes([tr if tr is not None else 0]) + b"\x00")
-        w, h = it["w"], it["h"]
-        out += b"\x2c" + _S.pack("<HHHHB", it.get("left", 0),
-                                 it.get("top", 0), w, h, 0)
-        out += bytes([min_code])
-        data = _lzw_encode(bytes(it["indices"]), min_code)
-        for i in range(0, len(data), 255):
-            blk = data[i:i + 255]
-            out += bytes([len(blk)]) + blk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _rgb(*idx):
-    return b"".join(_GIF_PALETTE[3 * i:3 * i + 3] for i in idx)
-
-
-def test_gif_frames_composites_subrect_and_fps():
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "indices": [0, 1, 2, 3], "delay": 5},
-        {"w": 1, "h": 1, "left": 1, "top": 1, "indices": [0]},
-    ])
-    w, h, fps, frames = MM._gif_frames(payload)
-    assert (w, h, fps) == (2, 2, 20.0)
-    assert frames == [_rgb(0, 1, 2, 3), _rgb(0, 1, 2, 0)]
-
-
-def test_gif_frames_transparency_keeps_underlying_pixels():
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "indices": [0, 1, 2, 3]},
-        {"w": 2, "h": 2, "indices": [1, 3, 3, 0], "transparent": 3},
-    ])
-    _, _, _, frames = MM._gif_frames(payload)
-    assert frames[1] == _rgb(1, 1, 2, 0)  # transparent 3 → underlying shows
-
-
-def test_gif_frames_disposal_background_and_previous():
-    # disposal 2: after the frame, its rect reverts to the background color
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "indices": [0, 0, 0, 0], "disposal": 2},
-        {"w": 1, "h": 1, "indices": [1]},
-    ], bg=2)
-    _, _, _, frames = MM._gif_frames(payload)
-    assert frames[0] == _rgb(0, 0, 0, 0)
-    assert frames[1] == _rgb(1, 2, 2, 2)  # bg (index 2) shows outside rect
-    # disposal 3: after the frame, the canvas reverts to the previous state
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "indices": [0, 1, 2, 3]},
-        {"w": 1, "h": 1, "indices": [1], "disposal": 3},
-        {"w": 1, "h": 1, "left": 1, "top": 1, "indices": [0]},
-    ])
-    _, _, _, frames = MM._gif_frames(payload)
-    assert frames == [_rgb(0, 1, 2, 3), _rgb(1, 1, 2, 3), _rgb(0, 1, 2, 0)]
-
-
-def test_gif_frames_rejects_out_of_screen_rect():
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "left": 1, "indices": [0, 1, 2, 3]},
-    ])
-    with pytest.raises(ValueError, match="outside logical screen"):
-        MM._gif_frames(payload)
-
-
-def test_sample_frames_animated_gif(spark):
-    payload = _agif(2, 2, _GIF_PALETTE, [
-        {"w": 2, "h": 2, "indices": [0, 1, 2, 3], "delay": 10},
-        {"w": 1, "h": 1, "indices": [1]},
-        {"w": 1, "h": 1, "left": 1, "indices": [2]},
-        {"w": 1, "h": 1, "top": 1, "indices": [3]},
-    ])
-    df = spark.createDataFrame([(7, payload)], "id long, payload binary")
-    out = MM.sample_frames(df, every_k=2).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in out] == [0, 2]
-    assert all(r["n_frames_total"] == 4 and r["fps"] == 10.0
-               and (r["width"], r["height"], r["channels"]) == (2, 2, 3)
-               for r in out)
-    assert bytes(out[0]["pixels"]) == _rgb(0, 1, 2, 3)
-    assert bytes(out[1]["pixels"]) == _rgb(1, 2, 2, 3)
-
-
-def test_decode_audio_keep_pcm_false_drops_sample_bytes(spark):
-    wav = _wav_full([0, 100, -100, 200], 1, 8000)
-    df = spark.createDataFrame([(0, wav)], "id long, payload binary")
-    out = MM.decode_audio(df, keep_pcm=False)
-    assert "pcm" not in out.columns  # stats-only: no decoded bytes shuffled
-    row = out.collect()[0]
-    assert row["n_frames"] == 4 and row["decode_error"] is None
-
-
-# --- round-5 fixes: WAV truncation, keep_pcm encode skip, y4m seek, MP3 ------
+# --- WAV truncation ----------------------------------------------------------
 
 def test_wav_truncated_data_chunk_is_poison():
     """A declared data-chunk length running past the payload must raise
     (round-4 advice): the old short-slice decode yielded plausible but
-    WRONG duration/rms/silence for a cut-off WAV."""
+    WRONG sample counts for a cut-off WAV."""
     wav = _wav_full(list(range(100)), 1, 8000)
     with pytest.raises(ValueError, match="truncated WAV data chunk"):
         MM._wav_samples(wav[:-10])
@@ -751,104 +396,3 @@ def test_wav_truncation_lands_in_decode_error(spark):
     assert got[0]["decode_error"] is None and got[0]["n_frames"] == 100
     assert got[1]["n_frames"] is None
     assert "truncated WAV data chunk" in got[1]["decode_error"]
-
-
-def test_audio_row_keep_pcm_false_skips_encode(monkeypatch):
-    """keep_pcm=False must not pay the clip+int16+tobytes encode of the
-    full sample array (round-4 verdict item #4). Counted via a
-    monkeypatched np.clip — the encode path's entry point."""
-    calls = {"n": 0}
-    real_clip = MM.np.clip
-
-    def counting_clip(*a, **k):
-        calls["n"] += 1
-        return real_clip(*a, **k)
-
-    monkeypatch.setattr(MM.np, "clip", counting_clip)
-    wav = _wav_full([0, 100, -100, 200], 1, 8000)
-    out = MM._audio_row(wav, None, 0.01, 20, False)
-    assert calls["n"] == 0 and out[6] is None  # no encode, no pcm
-    out = MM._audio_row(wav, None, 0.01, 20, True)
-    assert calls["n"] == 1 and len(out[6]) == 8  # encode runs when kept
-
-
-def test_y4m_sample_seeks_past_skipped_frames():
-    """Seek-sampling must materialize ONLY the sampled frames: corrupt a
-    NON-sampled frame's marker — the full decode raises on it, but the
-    seek path (which computes sampled offsets arithmetically and never
-    visits skipped frames) still succeeds. Timing-free structural proof
-    that skipped frames are not decoded (round-4 verdict item #5)."""
-    w, h = 4, 2
-    frames = [bytes([i] * (w * h)) for i in range(12)]
-    payload = _y4m(frames, w, h)
-    # frame 1 (never sampled at every_k=3) marker: FRAME -> FRAMX
-    stride = 6 + w * h * 3 // 2
-    data_start = payload.find(b"\n") + 1
-    off1 = data_start + 1 * stride
-    assert payload[off1:off1 + 6] == b"FRAME\n"
-    corrupted = payload[:off1] + b"FRAMX\n" + payload[off1 + 6:]
-    with pytest.raises(ValueError, match="bad y4m FRAME marker"):
-        MM._y4m_frames(corrupted)  # sequential full decode visits frame 1
-    wid, hei, fps, n_total, pairs = MM._y4m_sample(corrupted, every_k=3)
-    assert (wid, hei, fps, n_total) == (4, 2, 25.0, 12)
-    assert [(i, bytes(b)) for i, b in pairs] == [
-        (0, frames[0]), (3, frames[3]), (6, frames[6]), (9, frames[9])]
-
-
-def test_y4m_sample_matches_full_decode_and_caps():
-    w, h = 3, 2
-    frames = [bytes([i] * (w * h)) for i in range(10)]
-    payload = _y4m(frames, w, h, chroma=b"444")
-    wid, hei, fps, n_total, pairs = MM._y4m_sample(
-        payload, every_k=2, max_frames=3)
-    assert n_total == 10
-    assert [(i, bytes(b)) for i, b in pairs] == [
-        (0, frames[0]), (2, frames[2]), (4, frames[4])]
-    # every_k=1, no cap == the full decoder
-    _, _, _, n, allp = MM._y4m_sample(payload)
-    assert n == 10 and [bytes(b) for _, b in allp] == frames
-
-
-def test_y4m_sample_variable_params_falls_back_to_walk():
-    """A stream whose FRAME lines carry per-frame params breaks the
-    fixed-stride fast path; the sequential fallback must still slice
-    only the sampled indices and agree with the full decoder."""
-    w, h = 2, 2
-    frames = [bytes([i] * (w * h)) for i in range(6)]
-    extra = w * h // 2
-    head = b"YUV4MPEG2 W2 H2 F25:1 C420\n"
-    payload = head + b"".join(
-        b"FRAME Ixyz\n" + y + b"\x00" * extra for y in frames)
-    wid, hei, fps, n_total, pairs = MM._y4m_sample(
-        payload, every_k=2, max_frames=2)
-    assert (wid, hei, n_total) == (2, 2, 6)
-    assert [(i, bytes(b)) for i, b in pairs] == [
-        (0, frames[0]), (2, frames[2])]
-    with pytest.raises(ValueError, match="truncated y4m frame"):
-        MM._y4m_sample(payload[:-2], every_k=2)
-
-
-def test_mp3_bitrate_index_0xf_rejected():
-    # 0xFF 0xFB = MPEG1 layer III; third byte 0xF0 = bitrate index 0xF
-    meta = decode_header(b"\xff\xfb\xf0\x00" + b"\x00" * 64)
-    assert meta["error"] is not None and "bitrate" in meta["error"]
-    # a valid header (bitrate idx 9, 44.1 kHz, stereo) still decodes
-    meta = decode_header(b"\xff\xfb\x90\x00" + b"\x00" * 64)
-    assert meta["kind"] == "mp3" and meta["sample_rate"] == 44100
-
-
-def test_mp3_sync_scan_is_bounded():
-    """An ID3 tag with a corrupt syncsafe size must not trigger an O(n)
-    byte scan over a multi-MB garbage payload (round-4 advice): the
-    scan caps at 64 KiB past the tag and reports no-sync."""
-    import time
-    # syncsafe size points just past the 10-byte header; body is 4 MiB of
-    # 0x00 (no sync word anywhere)
-    payload = b"ID3" + bytes([4, 0, 0, 0, 0, 0, 0]) + b"\x00" * (4 << 20)
-    t0 = time.perf_counter()
-    meta = decode_header(payload)
-    elapsed = time.perf_counter() - t0
-    assert meta["error"] is not None and "frame sync" in meta["error"]
-    # 64 KiB scan is sub-ms; the old full scan of 4 MiB took ~0.5 s.
-    # Generous bound: just prove it is not O(payload).
-    assert elapsed < 0.25

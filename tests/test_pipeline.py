@@ -226,3 +226,39 @@ def test_real_scorer_decision_spread_on_natural_text(spark):
     # comes from the first pass (accepted/music), not the last resort
     total = sum(counts.values())
     assert counts.get(C.DECISION_FALLBACK, 0) < 0.5 * total, counts
+
+
+def test_run_resumable_releases_cascade_persists(spark, tmp_path):
+    """The cascade's persisted stages are unpersisted once the run's
+    writes are done: run_resumable registers no persisted RDD that
+    outlives it."""
+    inp = str(tmp_path / "in")
+    fixtures.corpus_df(spark, 40, num_partitions=2).write.parquet(inp)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert pipeline.run_resumable(spark, inp, str(tmp_path / "out"), "r1")
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+@pytest.mark.parametrize("size,want", [
+    ("8m", 8 << 20), ("8M", 8 << 20), ("128mb", 128 << 20),
+    ("64MB", 64 << 20), ("1048576", 1 << 20),
+])
+def test_size_bytes_accepts_spark_size_strings(size, want):
+    assert pipeline._size_bytes(size) == want
+
+
+def test_session_appends_to_deployment_excluded_rules(spark):
+    """session() adds CollapseProject to the optimizer exclusions already
+    in effect instead of replacing them."""
+    key = "spark.sql.optimizer.excludedRules"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "org.example.SomeRule")
+        for _ in range(2):  # appended once, however often it runs
+            again = pipeline.session(app="langid_mr_spark-tests",
+                                     master="local[4]", shuffle_partitions=4)
+        assert again.conf.get(key) == (
+            "org.example.SomeRule," + pipeline._COLLAPSE_PROJECT)
+    finally:
+        spark.conf.set(key, prior)

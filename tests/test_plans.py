@@ -7,10 +7,15 @@
 - the staged cascade evaluates each scoring UDF exactly once per pass
   (count of ArrowEvalPython nodes — SURVEY §4.2(b))
 - top-k compiles to TakeOrderedAndProject (no full sort)
+- the staged operator forms tokenize each document a bounded number of
+  times (``split(lower(`` count) and run a bounded number of Python UDFs
 """
 
+import importlib.util
 import re
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from langid_mr_spark import fixtures, pipeline
@@ -21,6 +26,16 @@ SF = "/root/testdata/sf0.001"
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+@pytest.fixture(scope="module")
+def em():
+    spec = importlib.util.spec_from_file_location(
+        "entrymod_plans", Path(__file__).resolve().parents[1]
+        / "__spark_entry__.py")
+    em = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(em)
+    return em
 
 
 def test_filter_pushdown_to_scan(spark):
@@ -94,6 +109,26 @@ def test_staged_cascade_udf_count(spark):
         "TableCacheQueryStage" in plan_cached
 
 
+def test_pipeline_plan_budget(spark):
+    """Plan budget of the staged forms (r06): each tokenize and each Python
+    UDF appears at most as often as the staged builders place it. A
+    regression to a Column-only form that re-evaluates its subtrees raises
+    these counts."""
+    out = pipeline.run_pipeline(fixtures.corpus_df(spark, 200))
+    plan = plan_of(out)
+    assert plan.count("split(lower(") <= 5, plan
+    assert plan.count("ArrowEvalPython") <= 13, plan
+
+
+@pytest.mark.parametrize("query,budget", [
+    ("gate_decisions", 4), ("stopword_ratio", 1), ("token_stats", 1),
+    ("quality_flags", 1), ("minhash_sig", 1), ("langid_heuristic", 1),
+])
+def test_contract_tokenize_budget(spark, em, query, budget):
+    plan = plan_of(em.queries()[query](spark, SF))
+    assert plan.count("split(lower(") <= budget, plan
+
+
 def test_scan_reads_only_needed_columns_in_pipeline(spark, tmp_path):
     """The heavy html column must be read (extraction) but `text`/`family`
     must not survive into the gate stages; spot-check the physical plan has
@@ -107,17 +142,11 @@ def test_scan_reads_only_needed_columns_in_pipeline(spark, tmp_path):
     assert m and all("family" not in line for line in m), plan
 
 
-def test_embedding_near_dups_is_bucket_join_not_nested_loop(spark):
+def test_embedding_near_dups_is_bucket_join_not_nested_loop(spark, em):
     """Round-1 finding: the contract's embedding near-dup was an all-pairs
     BroadcastNestedLoopJoin. The scale path must candidate-generate via the
     banded sign-LSH bucket join (hash join on (table, bucket)); the
     all-pairs formula survives only inside the DuckDB oracle."""
-    import importlib.util
-    from pathlib import Path as _P
-    spec = importlib.util.spec_from_file_location(
-        "entrymod_plans", _P(__file__).resolve().parents[1] / "__spark_entry__.py")
-    em = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(em)
     plan = plan_of(em.q_embedding_near_dups(spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan

@@ -1,7 +1,6 @@
 """Gopher/C4-style quality rules: golden cases + Spark/Python parity."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from langid_mr_spark import quality as Q
 
@@ -27,12 +26,8 @@ def test_python_golden():
 
 def test_spark_python_parity(spark):
     df = spark.createDataFrame([(t,) for t in CASES], ["t"])
-    cols = Q.quality_columns(F.col("t"))
-    rows = df.select(
-        "t",
-        *[c.alias(k) for k, c in cols.items()],
-        Q.quality_fail_reason(F.col("t")).alias("reason"),
-    ).collect()
+    rows = Q.with_quality(df, "t", out_col="reason",
+                          keep_metrics=True).collect()
     for r in rows:
         o = Q.quality_one(r["t"])
         assert r["reason"] == o["quality_fail_reason"], r["t"]

@@ -39,10 +39,6 @@ def test_incremental_equals_batch(spark, tmp_path):
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
-    # A3 windowed freshness metric runs over the output
-    w = streaming.windowed_throughput(spark, out, "1 hour").collect()
-    assert sum(r["docs"] for r in w) == 90
-
 
 def test_streaming_dedup_single_drain_equals_batch(spark, tmp_path):
     """Batch-replay parity: one AvailableNow drain over a whole corpus is
