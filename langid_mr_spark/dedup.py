@@ -267,7 +267,7 @@ def contamination_flags(corpus: DataFrame, eval_df: DataFrame,
     )
 
 
-# --- banded LSH index ---------------------------------------------------------------
+# --- incremental dedup against a persistent signature store -------------------------
 
 def banded_signatures(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_perm: int = 32,
@@ -305,6 +305,43 @@ def banded_signatures(df: DataFrame, id_col: str = "doc_id",
             )
         ).alias("bk"),
     ).select("id", "bk.band", "bk.key")
+
+
+def incremental_candidates(new_sigs: DataFrame,
+                           stored_sigs: DataFrame) -> DataFrame:
+    """Near-duplicate candidates of a NEW batch against itself and against
+    the existing corpus — without re-hashing the corpus. The stored side is
+    only ever probed on (band, key), so at 10^12 documents each incremental
+    batch costs O(batch) hashing plus one bucket-key join (bucket/partition
+    the store by `key` to make the probe shuffle-free).
+
+    Returns (id_a, id_b): old-vs-new pairs as (stored id, new id) in any id
+    order; new-vs-new pairs once with id_a < id_b. Verify with `jaccard` on
+    the candidate set.
+
+    Defense-in-depth: banded_signatures no longer emits the all-sentinel
+    (empty-shingle) rows, but a signature store WRITTEN BEFORE that guard
+    may still hold them — and one legacy sentinel bucket against a new
+    batch's sentinel rows re-creates the O(m²) blowup. Every permuted hash
+    is < _MERSENNE, so a legitimate key can never start with the sentinel
+    value; both sides are filtered on that prefix."""
+    sentinel = str(_MERSENNE)
+    new_sigs = new_sigs.filter(~F.col("key").startswith(sentinel))
+    stored_sigs = stored_sigs.filter(~F.col("key").startswith(sentinel))
+    new_a = new_sigs.select("band", "key", F.col("id").alias("id_a"))
+    new_b = new_sigs.select("band", "key", F.col("id").alias("id_b"))
+    new_vs_new = (
+        new_a.join(new_b, ["band", "key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+    stored_a = stored_sigs.select("band", "key", F.col("id").alias("id_a"))
+    old_vs_new = (
+        stored_a.join(new_b, ["band", "key"])
+        .filter(F.col("id_a") != F.col("id_b"))  # re-ingested same doc
+        .select("id_a", "id_b")
+    )
+    return new_vs_new.unionByName(old_vs_new).distinct()
 
 
 # --- winnowing fingerprints (partial-overlap / containment detection) ---------------

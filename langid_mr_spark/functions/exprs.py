@@ -229,6 +229,17 @@ def language_label(col: Column) -> Column:
     return F.coalesce(F.element_at(mapping, F.lower(col)), F.initcap(col))
 
 
+# --- X14 mean logprob with sentinel ----------------------------------------------
+
+def mean_logprob(arr: Column) -> Column:
+    """lang_gate.py:244-245 — mean of array; −99.0 when empty/null."""
+    return F.when(
+        arr.isNull() | (F.size(arr) == 0), F.lit(C.EMPTY_LOGPROB_SENTINEL)
+    ).otherwise(
+        F.aggregate(arr, F.lit(0.0), lambda a, x: a + x) / F.size(arr)
+    )
+
+
 # --- X15 argmax over {en, fr} (ties → en: Python max() insertion order) -----------
 
 def argmax_en_fr(score_en: Column, score_fr: Column) -> Column:

@@ -1,6 +1,7 @@
 """Retention / deletion maintenance (SURVEY.md §2.1 S9-S13).
 
-The reference batch-deletes old jobs from SQLite (purge_db.py:40-68).
+The reference batch-deletes old jobs from SQLite (purge_db.py:40-68) and
+removes orphaned storage files via a scan of known ids (purge_db.py:77-108).
 On a table format with SQL DELETE (Iceberg/Delta) these are one-statement
 operations; on plain parquet directories the idiomatic equivalent is a
 partition-pruned rewrite: read → anti-filter → dynamic-overwrite only the
@@ -53,6 +54,13 @@ def purge_by_retention(spark: SparkSession, path: str, ts_col: str,
             fs.rename(src, dst)
     fs.delete(hpath(staging), True)
     return removed
+
+
+def orphan_rows(files_df: DataFrame, jobs_df: DataFrame,
+                key: str = "url") -> DataFrame:
+    """S12 (purge_db.py:77-108): artifacts whose key has no owning row —
+    a left-anti join, the shuffle-minimal formulation."""
+    return files_df.join(jobs_df, key, "left_anti")
 
 
 def delete_by_keys(df: DataFrame, keys: list[str],

@@ -9,7 +9,8 @@ error rows (entropy decode needs a codec library).
 
 Surface:
 - ``sniff_format``  — native magic-byte dispatch → format label, no UDF
-  (audio_io's probe-order fallback analog, audio_io.py:66-101)
+  (audio_io's probe-order fallback analog, audio_io.py:66-101);
+  ``with_metadata`` adds it with the payload size as struct<format,size>
 - ``decode_image``  — mapInPandas over ``decode_pixels``: REAL pixel decode
   for PNG (stdlib zlib: 8-bit non-interlaced, all five filters, palette
   expansion), BMP (uncompressed 24/32-bit, bottom-up/top-down), PPM P6
@@ -18,7 +19,8 @@ Surface:
   ``decode_error`` (poison-safe rows, never dead tasks).
 - ``decode_audio``  — REAL RIFF/WAVE PCM decode (16-bit signed / 8-bit
   unsigned, chunk walk, interleaved channels) → rate, channels, frames
-  and int16 PCM bytes (the audio_io.py:103-148 load step).
+  and int16 PCM bytes (the audio_io.py:103-148 load step);
+  ``resample_linear`` is the resample-to-16k step as a numpy interp.
 """
 
 from __future__ import annotations
@@ -50,6 +52,18 @@ def sniff_format(col: Column) -> Column:
     for magic, label in reversed(MAGIC):
         out = F.when(prefix.startswith(magic), F.lit(label)).otherwise(out)
     return F.when(col.isNull(), F.lit(None)).otherwise(out)
+
+
+def sniff_metadata_col(col: Column) -> Column:
+    """struct<format string, size_bytes long> typed metadata."""
+    return F.struct(
+        sniff_format(col).alias("format"),
+        F.length(col).cast("long").alias("size_bytes"),
+    )
+
+
+def with_metadata(df: DataFrame, binary_col: str = "payload") -> DataFrame:
+    return df.withColumn("meta", sniff_metadata_col(F.col(binary_col)))
 
 
 # --- real pixel decode (pure Python: PNG via stdlib zlib, BMP, PPM) ----------
@@ -416,6 +430,21 @@ def _wav_samples(payload: bytes) -> tuple[int, np.ndarray]:
     else:
         raise NotImplementedError(f"WAV bit depth {bits} (only 8/16)")
     return rate, x.reshape(-1, ch)
+
+
+def resample_linear(x: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
+    """Linear-interpolation resample of (n_frames, channels) samples —
+    the reference's resample-to-16k step (audio_io.py:103-148) as a
+    deterministic numpy interp: output grid t_out = arange(ceil(n *
+    dst/src)) * src/dst sampled against t_in = arange(n)."""
+    if src_rate == dst_rate or x.shape[0] == 0:
+        return x
+    n = x.shape[0]
+    n_out = int(np.ceil(n * dst_rate / src_rate))
+    t_out = np.arange(n_out) * (src_rate / dst_rate)
+    t_in = np.arange(n, dtype=np.float64)
+    return np.stack(
+        [np.interp(t_out, t_in, x[:, c]) for c in range(x.shape[1])], axis=1)
 
 
 def _audio_row(b: bytes | None) -> tuple:

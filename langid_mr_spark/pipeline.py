@@ -456,6 +456,24 @@ def run_pipeline(
     )
 
 
+# --- X12: language-code rewrite over the typed output -------------------------------
+
+def rewrite_language_codes(df: DataFrame, fmt: str) -> DataFrame:
+    """X12 (main.py:662-679): the reference walks arbitrary JSON rewriting
+    every "language" key; with a typed schema the rewrite is finite —
+    withField on the known struct paths. Unknown codes pass through
+    (languages.py:44-47)."""
+    return (
+        df.withColumn("language", X.to_iso_code(F.col("language"), fmt))
+        .withColumn(
+            "score_meta",
+            F.col("score_meta").withField(
+                "language", X.to_iso_code(F.col("score_meta.language"), fmt)
+            ),
+        )
+    )
+
+
 # --- D1: salted repartition --------------------------------------------------------
 
 def salted_repartition(df: DataFrame, n: int, key: str = "url",

@@ -82,6 +82,26 @@ def test_minhash_candidates_superset_of_verified(docs):
     assert verified <= cands
 
 
+def test_incremental_candidates(spark, docs):
+    """New-batch dedup against a stored signature index: finds old-vs-new
+    and new-vs-new near-dups without re-hashing the stored corpus."""
+    stored = dedup.banded_signatures(docs)  # docs 0-5 already indexed
+    new_rows = [
+        (10, BASE),    # duplicate of stored 0/1
+        (11, NEAR),    # near-dup of stored 0/1 and of new 12
+        (12, NEAR),    # exact dup of new 11
+        (13, "unrelated fresh content about mountains and rivers today"),
+    ]
+    new = spark.createDataFrame(new_rows, "doc_id long, text string")
+    cands = {(r["id_a"], r["id_b"]) for r in dedup.incremental_candidates(
+        dedup.banded_signatures(new), stored).collect()}
+    assert (0, 10) in cands and (1, 10) in cands   # old vs new exact
+    assert (0, 11) in cands                        # old vs new near
+    assert (11, 12) in cands                       # new vs new
+    assert all(b >= 10 for _, b in cands)          # id_b always new-batch
+    assert not any(a == 13 or b == 13 for a, b in cands)
+
+
 def test_simhash_distance(docs):
     got = {r["id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     assert got[0] == got[1]  # identical docs → identical fingerprint
@@ -259,3 +279,22 @@ def test_duplicate_clusters_converges_exactly_at_round_cap(spark):
     got = {r["id"]: r["cluster_id"]
            for r in _dd.duplicate_clusters(pairs, ids, max_rounds=5).collect()}
     assert got == {i: 0 for i in range(n)}
+
+
+def test_incremental_candidates_ignores_legacy_sentinel_rows(spark):
+    """A signature store written before the empty-shingle banding guard may
+    still hold all-sentinel rows; probing it with a new batch must not
+    resurrect the sentinel mega-bucket."""
+    from langid_mr_spark.dedup import _MERSENNE
+
+    legacy_key = "_".join([str(_MERSENNE)] * 2)
+    stored = spark.createDataFrame(
+        [(i, b, legacy_key) for i in range(50) for b in range(2)],
+        "id long, band int, key string")
+    new = spark.createDataFrame(
+        [(100 + i, b, legacy_key) for i in range(10) for b in range(2)]
+        + [(200, 0, "123_456"), (201, 0, "123_456")],
+        "id long, band int, key string")
+    cands = {(r["id_a"], r["id_b"])
+             for r in dedup.incremental_candidates(new, stored).collect()}
+    assert cands == {(200, 201)}

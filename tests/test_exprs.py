@@ -122,6 +122,15 @@ def test_language_label_parity(spark):
     assert got == [TN.get_language_label(c) for c in codes]
 
 
+def test_mean_logprob(spark):
+    df = spark.createDataFrame(
+        [([-1.0, -2.0, -3.0],), ([],), (None,)],
+        "arr array<double>")
+    got = [r["out"] for r in df.select(
+        X.mean_logprob(F.col("arr")).alias("out")).collect()]
+    assert got == [-2.0, C.EMPTY_LOGPROB_SENTINEL, C.EMPTY_LOGPROB_SENTINEL]
+
+
 def test_argmax_ties_to_en(spark):
     df = spark.createDataFrame([(-1.0, -1.0), (-1.0, -0.5), (-0.5, -1.0)],
                                ["e", "f"])

@@ -1,4 +1,4 @@
-"""Retention purge / IN-list delete (S9-S11 analogs)."""
+"""Retention purge / orphan / IN-list delete (S9-S13 analogs)."""
 
 from pyspark.sql import functions as F
 
@@ -35,6 +35,14 @@ def test_purge_noop_when_nothing_expired(spark, tmp_path):
         .write.partitionBy("dt").parquet(path)
     assert MT.purge_by_retention(spark, path, "warc_ts", "2020-01-01") == 0
     assert spark.read.parquet(path).count() == 30
+
+
+def test_orphan_rows_left_anti(spark):
+    files = spark.createDataFrame(
+        [("u1",), ("u2",), ("u3",)], ["url"])
+    jobs = spark.createDataFrame([("u1",), ("u3",)], ["url"])
+    got = {r["url"] for r in MT.orphan_rows(files, jobs).collect()}
+    assert got == {"u2"}
 
 
 def test_delete_by_keys(spark):

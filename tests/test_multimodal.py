@@ -29,6 +29,13 @@ def test_sniff_format(frame):
     assert got == WANT
 
 
+def test_metadata_sizes(frame):
+    got = {r["id"]: r["meta"]["size_bytes"]
+           for r in MM.with_metadata(frame).collect()}
+    for i, payload in PAYLOADS:
+        assert got[i] == (len(payload) if payload is not None else None)
+
+
 # --- real pixel decode (golden bytes) ---------------------------------------
 
 def _encode_png(pixels, w, h, nch, filters):
@@ -335,6 +342,19 @@ def test_wav_samples_16_and_8_bit():
         bad = _wav_full([0], 1, 8000).replace(
             _S.pack("<HH", 1, 1), _S.pack("<HH", 3, 1), 1)
         MM._wav_samples(bad)
+
+
+def test_resample_linear_halves_and_doubles():
+    import numpy as np
+
+    x = np.arange(8, dtype=np.float64).reshape(-1, 1)
+    down = MM.resample_linear(x, 8000, 4000)
+    assert down[:, 0].tolist() == [0.0, 2.0, 4.0, 6.0]
+    up = MM.resample_linear(x, 8000, 16000)
+    assert up.shape == (16, 1)
+    assert up[:4, 0].tolist() == [0.0, 0.5, 1.0, 1.5]
+    same = MM.resample_linear(x, 8000, 8000)
+    assert same is x
 
 
 def test_decode_audio_dataframe(spark):

@@ -1,9 +1,10 @@
 """Skew handling (D1): salted repartition must spread a hot host's pages
-across many partitions, and 100×-length documents stay bounded."""
+across many partitions, 100×-length documents stay bounded, and X12
+language-code rewrite over the typed output."""
 
 from pyspark.sql import functions as F
 
-from langid_mr_spark import pipeline
+from langid_mr_spark import fixtures, pipeline
 
 
 def test_salted_repartition_spreads_hot_host(spark):
@@ -45,3 +46,16 @@ def test_extreme_long_doc_bounded(spark):
     assert r["gate_decision"] == o["gate_decision"]
     assert r["scrubbed_text"] == o["scrubbed_text"]
     assert r["quality_fail_reason"] == o["quality_fail_reason"]
+
+
+def test_rewrite_language_codes(spark):
+    src = fixtures.corpus_df(spark, 60, num_partitions=2)
+    out = pipeline.run_pipeline(src)
+    rewritten = pipeline.rewrite_language_codes(out, "iso639-2b").collect()
+    assert any(r["language"] == "eng" for r in rewritten)
+    for r in rewritten:
+        assert r["language"] not in ("en", "fr")  # mapped
+        if r["language"] == "eng":
+            assert r["score_meta"]["language"] in ("eng", "none")
+        if r["language"] == "none":  # passthrough for non-mapped codes
+            assert r["score_meta"]["language"] == "none"
