@@ -47,14 +47,19 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
     per-document expression chain runs in a single task regardless of
     split-size configs (measured: stopword_ratio 5.7 s single-task vs 0.4 s
     spread, sf1.0 local[32]). The shuffle moves each row once (a few MB
-    here); the expensive projection stays ABOVE the exchange. Sized from
-    defaultParallelism, not a constant, so cluster runs scale with the
-    executor count; explicit numPartitions keeps AQE from coalescing the
-    tiny-by-bytes (but compute-heavy) exchange back to one partition.
+    here); the expensive projection stays ABOVE the exchange. Sized as
+    max(defaultParallelism, the scan's own partition count): at least one
+    partition per core, so cluster runs scale with the executor count, and
+    never fewer than the scan already has, so a large table keeps
+    split-sized partitions (defaultParallelism alone would cut a 100 TB
+    table into ~50 GB partitions on a 2000-core cluster). Explicit
+    numPartitions keeps AQE from coalescing the tiny-by-bytes (but
+    compute-heavy) exchange back to one partition.
     Results are unaffected: aggregations downstream are over integers /
     per-row values, and every contract query's final orderBy key is
     unique."""
-    n = df.sparkSession.sparkContext.defaultParallelism
+    n = max(df.sparkSession.sparkContext.defaultParallelism,
+            df.rdd.getNumPartitions())
     return df.repartition(n, F.col(key))
 
 
@@ -121,6 +126,12 @@ def _make_heuristic_scorer(mult: float):
     return scorer
 
 
+# Built once: apply_gate caches its stage projections per scorer object, so
+# every query passes these same objects rather than a fresh closure each.
+_SCORER1 = _make_heuristic_scorer(_SCORER1_MULT)
+_SCORER2 = _make_heuristic_scorer(_SCORER2_MULT)
+
+
 def _heuristic_ppl_scorer(col):
     """Injected fallback scorer: 'perplexity' = the stopword ratios (higher
     is better, matching argmax_en_fr's orientation)."""
@@ -138,8 +149,8 @@ def q_gate_decisions_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     gated = gate.apply_gate(
         docs, text_col="text",
-        scorer=_make_heuristic_scorer(_SCORER1_MULT),
-        scorer2=_make_heuristic_scorer(_SCORER2_MULT),
+        scorer=_SCORER1,
+        scorer2=_SCORER2,
         ppl_scorer=_heuristic_ppl_scorer,
         persist_level=None,
     )
@@ -169,8 +180,8 @@ def q_translation_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     gated = gate.apply_gate(
         docs, text_col="text",
-        scorer=_make_heuristic_scorer(_SCORER1_MULT),
-        scorer2=_make_heuristic_scorer(_SCORER2_MULT),
+        scorer=_SCORER1,
+        scorer2=_SCORER2,
         ppl_scorer=_heuristic_ppl_scorer,
         persist_level=None,
     ).withColumn("snip", X.snippet_first_words(F.col("text"), 10))
@@ -708,8 +719,8 @@ def q_curation_full_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = CU.curate(
         inp, dedup_threshold=0.5, per_lang_cap=25, sample_fraction=0.9,
         use_html=False, persist_level=None,
-        scorer=_make_heuristic_scorer(_SCORER1_MULT),
-        scorer2=_make_heuristic_scorer(_SCORER2_MULT),
+        scorer=_SCORER1,
+        scorer2=_SCORER2,
         ppl_scorer=_heuristic_ppl_scorer,
     )
     return out.select(

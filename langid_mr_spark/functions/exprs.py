@@ -9,14 +9,51 @@ keeps the whole per-document heuristic stage inside WholeStageCodegen — the
 only Python round-trips in the pipeline are the model-scoring UDFs
 (scoring.py), mirroring the reference where the model is the only non-trivial
 per-document cost (SURVEY.md §2.4).
+
+Once-per-JVM rule: code that builds a hot-path plan makes its Column lists
+once per py4j gateway (``per_jvm``) and reuses them for every later plan.
+Every Column is built by py4j round trips to the JVM — about 3 per
+``F.*`` call on top of its arguments and about 4 per ``isin`` literal (a
+64-word stopword ``isin`` takes ~280 round trips, 45-60 ms on a 4-CPU
+VM) — so rebuilding the same expressions from the same names and
+constants for every ``run_pipeline`` call made that build, not the work,
+most of each job's fixed cost. Columns are immutable expression trees
+and hold no session state, so one list serves any number of plans on the
+JVM that built it.
 """
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, TypeVar
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .. import constants as C
+
+_T = TypeVar("_T")
+
+
+def per_jvm(build: Callable[..., _T]) -> Callable[..., _T]:
+    """Memoize a Column-building function per py4j gateway (the rule above).
+
+    The key is the gateway plus ``build``'s arguments, which must be
+    hashable: column names, flags and scorer objects (by identity) — never
+    Columns, whose ``==`` builds an expression. A new gateway never sees
+    another JVM's references; the bound caps what a caller that passes a
+    fresh scorer on every call can pin. Every caller shares the result:
+    callers only read it, so hold Columns in tuples, not lists."""
+    @functools.lru_cache(maxsize=64)
+    def cached(gateway, *args, **kwargs):
+        return build(*args, **kwargs)
+
+    @functools.wraps(build)
+    def wrapper(*args, **kwargs):
+        return cached(SparkContext._gateway, *args, **kwargs)
+    return wrapper
+
 
 # --- literals ----------------------------------------------------------------
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from contextvars import ContextVar
+from types import SimpleNamespace
 from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
@@ -65,27 +66,42 @@ def with_pass1(df: DataFrame, text_col: str = "text",
     string bytes flowing through the staged-cascade persist (UnsafeRow
     copies every column's bytes; an alias column is a real copy)."""
     scorer = scorer or scoring.langid_scores_udf
-    if text_is_probe:
-        probe_col = text_col
-        out = df
-    else:
-        probe_col = "_probe"
-        out = df.withColumn(probe_col, X.probe(F.col(text_col)))
+    bounded, scored, heuristics = _pass1_stages(
+        tuple(df.columns), text_col, scorer, text_is_probe)
+    out = df.select("*", *bounded) if bounded else df
+    return out.select("*", *scored).select(*heuristics)
+
+
+@X.per_jvm
+def _pass1_stages(base: tuple[str, ...], text_col: str, scorer: Scorer,
+                  text_is_probe: bool):
+    """with_pass1's stage projections: the probe (unless the text is one),
+    then the token array, music flag and scorer struct, then the metrics
+    over the tokens and the fields of the struct — dropping both."""
+    probe_col = text_col if text_is_probe else "_probe"
+    bounded = (() if text_is_probe
+               else (X.probe(F.col(text_col)).alias(probe_col),))
+    probe = F.col(probe_col)
     # Materialize tokens once — token_count and both stopword ratios read
     # the same array column instead of re-running split+filter three times.
-    out = (
-        out.withColumn("_tokens", X.tokenize(F.col(probe_col)))
-        .withColumn("_tc1", X.token_count(F.col("_tokens")))
-        .withColumn("_en1", X.stopword_ratio(F.col("_tokens"), "en"))
-        .withColumn("_fr1", X.stopword_ratio(F.col("_tokens"), "fr"))
-        .withColumn("_music1", X.is_music_only(F.col(probe_col)))
-        .withColumn("_s1", scorer(F.col(probe_col)))
-        .withColumn("_lang1", F.col("_s1.lang"))
-        .withColumn("_p1", X.safe_probability(F.col("_s1.prob")))
-        .withColumn("_err1", _scorer_error("_s1", scorer))
-        .drop("_s1", "_tokens")
+    scored = (
+        X.tokenize(probe).alias("_tokens"),
+        X.is_music_only(probe).alias("_music1"),
+        scorer(probe).alias("_s1"),
     )
-    return out
+    tokens = F.col("_tokens")
+    kept = (*base, *([] if text_is_probe else [probe_col]))
+    heuristics = (
+        *[F.col(c) for c in kept],
+        X.token_count(tokens).alias("_tc1"),
+        X.stopword_ratio(tokens, "en").alias("_en1"),
+        X.stopword_ratio(tokens, "fr").alias("_fr1"),
+        F.col("_music1"),
+        F.col("_s1.lang").alias("_lang1"),
+        X.safe_probability(F.col("_s1.prob")).alias("_p1"),
+        _scorer_error("_s1", scorer).alias("_err1"),
+    )
+    return bounded, scored, heuristics
 
 
 def _scorer_error(struct_col: str, scorer: Scorer) -> Column:
@@ -100,8 +116,10 @@ def _scorer_error(struct_col: str, scorer: Scorer) -> Column:
     return F.lit(None).cast("string")
 
 
+@X.per_jvm
 def _decision1() -> Column:
-    """C1-C4 (lang_gate.py:340-453). NULL = undecided (falls to pass 2).
+    """``_d1``: C1-C4 (lang_gate.py:340-453). NULL = undecided (falls to
+    pass 2).
 
     Note C3/C4 are reachable at p ≥ MID_UPPER when the C2 speechiness guard
     fails — the reference's control flow falls *through* to the mid-zone
@@ -130,11 +148,13 @@ def _decision1() -> Column:
         .when(high_conf, F.lit(C.DECISION_HIGH_CONF))
         .when(mid_en, F.lit(C.DECISION_MID_EN))
         .when(mid_fr, F.lit(C.DECISION_MID_FR))
-    )
+    ).alias("_d1")
 
 
-def _emit_pass1(df: DataFrame) -> DataFrame:
-    """Project decided₁ + poison rows to the unified gate columns.
+@X.per_jvm
+def _emit_pass1(base: tuple[str, ...]) -> tuple[Column, ...]:
+    """Project decided₁ + poison rows to ``base`` + the unified gate
+    columns.
 
     Error rows (scorer threw; D5, runner.py:192-199) are emitted HERE as
     conditional columns rather than as a separate filter+union branch: a
@@ -145,8 +165,8 @@ def _emit_pass1(df: DataFrame) -> DataFrame:
     d = F.col("_d1")
     err = F.col("_err1").isNotNull()
     music = (d == C.DECISION_MUSIC_ONLY) & ~err
-    return df.select(
-        *[c for c in df.columns if not c.startswith("_")],
+    return (
+        *[F.col(c) for c in base],
         F.when(err, F.lit(C.DECISION_ERROR)).otherwise(d)
          .alias("gate_decision"),
         F.when(music | err, F.lit("none")).otherwise(F.col("_lang1"))
@@ -163,14 +183,15 @@ def _emit_pass1(df: DataFrame) -> DataFrame:
     )
 
 
-def _emit_pass2(df: DataFrame) -> DataFrame:
+@X.per_jvm
+def _emit_pass2(base: tuple[str, ...]) -> tuple[Column, ...]:
     """C5/C6 (lang_gate.py:472-511) + pass-2 poison rows. C5 reports the
     VAD transcript's token count; C6 reports FIRST-pass ratios/token_count
     (lang_gate.py:486,507-509)."""
     err = F.col("_err2").isNotNull()
     music = F.col("_music2") & ~err
-    return df.select(
-        *[c for c in df.columns if not c.startswith("_")],
+    return (
+        *[F.col(c) for c in base],
         F.when(err, F.lit(C.DECISION_ERROR))
          .when(music, F.lit(C.DECISION_MUSIC_ONLY))
          .otherwise(F.lit(C.DECISION_VAD_RETRY)).alias("gate_decision"),
@@ -188,16 +209,17 @@ def _emit_pass2(df: DataFrame) -> DataFrame:
     )
 
 
-def _emit_pass3(df: DataFrame, strict: bool) -> DataFrame:
+@X.per_jvm
+def _emit_pass3(base: tuple[str, ...], strict: bool) -> tuple[Column, ...]:
     """C7 strict reject (error row, lang_gate.py:527-531) or C8 fallback
     (argmax of EN/FR scoring, probability NULL, lang_gate.py:533-546) +
     pass-3 poison rows — ONE projection over the whole residue, so the ppl
     UDF evaluates exactly once (a separate error branch would run it a
     second time on every residual row)."""
-    base = [c for c in df.columns if not c.startswith("_")]
+    kept = [F.col(c) for c in base]
     if strict:
-        return df.select(
-            *base,
+        return (
+            *kept,
             F.lit(C.DECISION_STRICT_REJECT).alias("gate_decision"),
             F.col("_lang1").alias("language"),
             F.col("_p1").cast("double").alias("probability"),
@@ -209,8 +231,8 @@ def _emit_pass3(df: DataFrame, strict: bool) -> DataFrame:
             F.lit(False).alias("music_only"),
         )
     err = F.col("_err3").isNotNull()
-    return df.select(
-        *base,
+    return (
+        *kept,
         F.when(err, F.lit(C.DECISION_ERROR))
          .otherwise(F.lit(C.DECISION_FALLBACK)).alias("gate_decision"),
         F.when(err, F.lit("none"))
@@ -279,53 +301,71 @@ def apply_gate(
     # tests may inject a distinct second-pass scorer (the reference mocks
     # return different scores per transcribe() call, test_enfr_gate.py:94-116)
     scorer2 = scorer2 or scorer
-    probe_col = text_col if text_is_probe else "_probe"
+    base = tuple(c for c in df.columns if not c.startswith("_"))
+    p = _cascade_stages(text_col if text_is_probe else "_probe",
+                        scorer2, ppl_scorer)
 
     scored1 = (with_pass1(df, text_col, scorer, text_is_probe)
-               .withColumn("_d1", _decision1()))
+               .select("*", _decision1()))
     if persist_level is not None:
         scored1 = _persist(scored1, persist_level)
     # poison rows are decided rows (decision='error'): exactly TWO consumers
     # of the persisted stage, same as the error-free round-1 design
-    decided1 = _emit_pass1(scored1.filter(
-        F.col("_err1").isNotNull() | F.col("_d1").isNotNull()))
+    decided1 = scored1.filter(p.decided1).select(*_emit_pass1(base))
 
-    undecided1 = scored1.filter(
-        F.col("_err1").isNull() & F.col("_d1").isNull())
-    cleaned = X.vad_clean(F.col(probe_col))
-    tokens2 = X.tokenize(F.col("_cleaned"))
-    scored2 = (
-        undecided1.withColumn("_cleaned", cleaned)
-        .withColumn("_music2", X.is_music_only(F.col("_cleaned")))
-        .withColumn("_tc2", X.token_count(tokens2))
-        .withColumn("_s2", scorer2(F.col("_cleaned")))
-        .withColumn("_lang2", F.col("_s2.lang"))
-        .withColumn("_p2", X.safe_probability(F.col("_s2.prob")))
-        .withColumn("_err2", _scorer_error("_s2", scorer2))
-        .withColumn(
-            "_d2",
-            F.col("_music2")
-            | (_allowed(F.col("_lang2")) & (F.col("_p2") >= C.LANG_DETECT_MIN_PROB)),
-        )
-    )
+    scored2 = scored1.filter(p.undecided1)
+    for stage in p.pass2:
+        scored2 = scored2.select("*", *stage)
     if persist_level is not None:
         scored2 = _persist(scored2, persist_level)
-    decided2 = _emit_pass2(scored2.filter(
-        F.col("_err2").isNotNull() | F.col("_d2")))
+    decided2 = scored2.filter(p.decided2).select(*_emit_pass2(base))
 
-    undecided2 = scored2.filter(F.col("_err2").isNull() & ~F.col("_d2"))
+    undecided2 = scored2.filter(p.undecided2)
     if strict_reject:
-        decided3 = _emit_pass3(undecided2, strict=True)
+        decided3 = undecided2.select(*_emit_pass3(base, True))
     else:
         # Fallback scores the PROBE, not the cleaned text (lang_gate.py:535)
-        scored3 = (
-            undecided2.withColumn("_ppl", ppl_scorer(F.col(probe_col)))
-            .withColumn("_err3", _scorer_error("_ppl", ppl_scorer))
-        )
-        decided3 = _emit_pass3(scored3, strict=False)
+        scored3 = undecided2
+        for stage in p.pass3:
+            scored3 = scored3.select("*", *stage)
+        decided3 = scored3.select(*_emit_pass3(base, False))
 
     out = decided1.unionByName(decided2).unionByName(decided3)
     return with_derived(out)
+
+
+@X.per_jvm
+def _cascade_stages(probe_col: str, scorer2: Scorer,
+                    ppl_scorer: Scorer) -> SimpleNamespace:
+    """apply_gate's split predicates and its pass-2/pass-3 stage
+    projections. Each stage materializes what the next one reads: the
+    VAD-cleaned text before its consumers, each scorer struct before its
+    field extraction, the pass-2 fields before the pass-2 decision."""
+    cleaned = F.col("_cleaned")
+    err1, d1 = F.col("_err1"), F.col("_d1")
+    err2, d2 = F.col("_err2"), F.col("_d2")
+    return SimpleNamespace(
+        decided1=err1.isNotNull() | d1.isNotNull(),
+        undecided1=err1.isNull() & d1.isNull(),
+        pass2=(
+            (X.vad_clean(F.col(probe_col)).alias("_cleaned"),),
+            (X.is_music_only(cleaned).alias("_music2"),
+             X.token_count(X.tokenize(cleaned)).alias("_tc2"),
+             scorer2(cleaned).alias("_s2")),
+            (F.col("_s2.lang").alias("_lang2"),
+             X.safe_probability(F.col("_s2.prob")).alias("_p2"),
+             _scorer_error("_s2", scorer2).alias("_err2")),
+            ((F.col("_music2")
+              | (_allowed(F.col("_lang2"))
+                 & (F.col("_p2") >= C.LANG_DETECT_MIN_PROB))).alias("_d2"),),
+        ),
+        decided2=err2.isNotNull() | d2,
+        undecided2=err2.isNull() & ~d2,
+        pass3=(
+            (ppl_scorer(F.col(probe_col)).alias("_ppl"),),
+            (_scorer_error("_ppl", ppl_scorer).alias("_err3"),),
+        ),
+    )
 
 
 def with_derived(out: DataFrame) -> DataFrame:
@@ -335,34 +375,36 @@ def with_derived(out: DataFrame) -> DataFrame:
     columns first — classify_gate_path + classify_pipeline_mode reference
     lower(trim(coalesce(...))) ~14× between them, and every inlined
     reference re-allocates the lowered copy per row. The classifier
-    when-chains then read the attributes (same comparisons, same order)."""
+    when-chains then read the attributes (same comparisons, same order),
+    and ``mid_zone``, which both classifiers read, is staged with them."""
+    normalized, classified = _derived_stages(tuple(out.columns))
+    return out.select("*", *normalized).select(*classified)
+
+
+@X.per_jvm
+def _derived_stages(base: tuple[str, ...]):
+    """with_derived's two stage projections over ``base``."""
     prob_value = X.safe_probability(F.col("probability"))
     decision = F.col("gate_decision")
-    norm = lambda c: F.lower(F.trim(F.coalesce(c, F.lit(""))))  # noqa: E731
-    staged = out.select(
-        "*",
-        norm(F.col("gate_decision")).alias("_dn"),
-        norm(F.col("language")).alias("_ln"),
-        norm(F.col("detection_method")).alias("_mn"),
+    norm = lambda c: F.lower(F.trim(F.coalesce(F.col(c), F.lit(""))))  # noqa: E731
+    normalized = (
+        norm("gate_decision").alias("_dn"),
+        norm("language").alias("_ln"),
+        norm("detection_method").alias("_mn"),
+        ((prob_value >= C.MID_LOWER) & (prob_value < C.MID_UPPER))
+        .alias("mid_zone"),
+        decision.isin(*sorted(C.KEEP_DECISIONS)).alias("keep"),
+        F.when(decision == C.DECISION_MUSIC_ONLY, C.DROP_MUSIC_ONLY)
+        .when(decision == C.DECISION_STRICT_REJECT, C.DROP_NON_ENFR_STRICT)
+        .when(decision == C.DECISION_ERROR, C.DROP_ERROR).alias("drop_reason"),
     )
-    return (
-        staged.withColumn(
-            "mid_zone",
-            (prob_value >= C.MID_LOWER) & (prob_value < C.MID_UPPER),
-        )
-        .withColumn("keep", decision.isin(*sorted(C.KEEP_DECISIONS)))
-        .withColumn(
-            "drop_reason",
-            F.when(decision == C.DECISION_MUSIC_ONLY, C.DROP_MUSIC_ONLY)
-            .when(decision == C.DECISION_STRICT_REJECT, C.DROP_NON_ENFR_STRICT)
-            .when(decision == C.DECISION_ERROR, C.DROP_ERROR),
-        )
-        .withColumn("gate_path",
-                    classify_gate_path(F.col("_dn"), F.col("_ln")))
-        .withColumn("pipeline_mode",
-                    classify_pipeline_mode(F.col("_dn"), F.col("_mn")))
-        .drop("_dn", "_ln", "_mn")
+    classified = (
+        *[F.col(c) for c in (*base, "mid_zone", "keep", "drop_reason")],
+        classify_gate_path(F.col("_dn"), F.col("_ln")).alias("gate_path"),
+        classify_pipeline_mode(F.col("_dn"), F.col("_mn"))
+        .alias("pipeline_mode"),
     )
+    return normalized, classified
 
 
 def classify_gate_path(d: Column | None = None,

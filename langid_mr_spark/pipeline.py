@@ -27,6 +27,7 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import re
+from types import SimpleNamespace
 from typing import Iterator
 
 import pandas as pd
@@ -221,6 +222,7 @@ def extract_text_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 # --- S3: ingest validation ------------------------------------------------------
 
+@X.per_jvm
 def valid_input(html_col: str = "html", url_col: str = "url") -> Column:
     """utils.validate_upload analog (utils.py:13-18, config.py:39-44):
     payload present, size-capped, url present."""
@@ -233,6 +235,7 @@ def valid_input(html_col: str = "html", url_col: str = "url") -> Column:
 
 # --- score_meta struct (gate_meta analog, lang_gate.py:186-204) -------------------
 
+@X.per_jvm
 def score_meta_struct() -> Column:
     return F.struct(
         F.col("mid_zone"),
@@ -267,6 +270,9 @@ OUTPUT_COLS = [
 
 
 _DEFAULT = object()
+
+# input columns carried through untouched to the output
+_CARRIED = ("url", "warc_ts", "lang")
 
 
 def run_pipeline(
@@ -305,37 +311,20 @@ def run_pipeline(
 
     if persist_level is _DEFAULT:
         persist_level = StorageLevel.DISK_ONLY
+    e = _plan_stages(use_html, carry_text)
 
-    carried = ["url", "warc_ts", "lang"]
+    invalid = df.filter(e.invalid).select(*e.invalid_cols)
+    valid = df.filter(e.valid)
 
-    invalid = (
-        df.filter(~valid_input())
-        .select(
-            *carried,
-            F.lit(None).cast("string").alias("extracted"),
-        )
-    )
-    valid = df.filter(valid_input())
-
-    if use_html:
-        # S4: decode payload once per document (runner.py:39-40); drop the
-        # heavy binary column immediately after (column pruning for every
-        # downstream stage, persist, and shuffle). extract_error marks
-        # poison rows (D5) — carried through the gate, folded into
-        # drop_reason='error' at the end (single extraction pass; the gate's
-        # persist means the split never re-runs the UDF).
-        extracted = valid.select(
-            *carried, extract_text_udf(F.col("html")).alias("_ex")
-        ).select(
-            *carried,
-            F.col("_ex.extracted").alias("extracted"),
-            F.col("_ex.error").alias("extract_error"),
-        )
-    else:
-        extracted = valid.select(
-            *carried, F.col("text").alias("extracted"),
-            F.lit(None).cast("string").alias("extract_error"),
-        )
+    # S4: decode payload once per document (runner.py:39-40); drop the
+    # heavy binary column immediately after (column pruning for every
+    # downstream stage, persist, and shuffle). extract_error marks poison
+    # rows (D5) — carried through the gate, folded into drop_reason='error'
+    # at the end (single extraction pass; the gate's persist means the
+    # split never re-runs the UDF).
+    extracted = valid
+    for stage in e.extract:
+        extracted = extracted.select(*stage)
 
     # Gopher/C4-style quality rules (north_star) are computed on the FULL
     # extracted text — doc-length/repetition rules need the whole document —
@@ -353,12 +342,7 @@ def run_pipeline(
     # document costs the same as a normal one past this point (X19/X20
     # bounded-work analog, lang_gate.py:13, runner.py:27). carry_text="full"
     # keeps the unbounded text alongside for whole-document dedup.
-    carry_full = carry_text == "full"
-    extracted = extracted.select(
-        *carried, "quality_fail_reason", "extract_error",
-        *([F.col("extracted").alias("extracted_full")] if carry_full else []),
-        X.probe(F.col("extracted")).alias("extracted"),
-    )
+    extracted = extracted.select(*e.bounded)
 
     gated = gate.apply_gate(
         extracted,
@@ -373,58 +357,31 @@ def run_pipeline(
 
     # Invalid-input rows become keep=false rows, not exceptions (D5 analog:
     # errors are rows; SURVEY.md §2.5 drop_reason='invalid_input').
-    invalid_gated = invalid.select(
-        "*",
-        F.lit(None).cast("string").alias("quality_fail_reason"),
-        F.lit(None).cast("string").alias("extract_error"),
-        F.lit(None).cast("string").alias("gate_decision"),
-        F.lit("none").alias("language"),
-        F.lit(None).cast("double").alias("probability"),
-        F.lit(None).cast("string").alias("detection_method"),
-        F.lit(False).alias("use_vad"),
-        F.lit(0.0).alias("en_ratio"),
-        F.lit(0.0).alias("fr_ratio"),
-        F.lit(0).alias("token_count"),
-        F.lit(False).alias("music_only"),
-        F.lit(False).alias("mid_zone"),
-        F.lit(False).alias("keep"),
-        F.lit(C.DROP_INVALID_INPUT).alias("drop_reason"),
-        F.lit(C.GATE_PATH_UNKNOWN).alias("gate_path"),
-        F.lit(C.PIPELINE_MODE_UNKNOWN).alias("pipeline_mode"),
-    )
-    if carry_full:
-        invalid_gated = invalid_gated.withColumn(
-            "extracted_full", F.lit(None).cast("string"))
-
-    combined = gated.unionByName(invalid_gated)
+    combined = gated.unionByName(invalid.select("*", *e.invalid_gate_cols))
 
     # Fold extraction poison rows into the same error surface as scorer
-    # poison rows (gate._emit_error): keep=false, drop_reason='error'.
+    # poison rows (gate._emit_pass1/2/3): keep=false, drop_reason='error'.
+    return combined.withColumns(dict(e.error_fold)).select(*e.output)
+
+
+@X.per_jvm
+def _plan_stages(use_html: bool, carry_text: bool | str) -> SimpleNamespace:
+    """run_pipeline's predicates and stage projections (built once per
+    JVM): the invalid-row branch, the extraction stages, the bounding
+    projection, the error fold and the output projection."""
+    carried = [F.col(c) for c in _CARRIED]
+    carry_full = carry_text == "full"
+    null_str = F.lit(None).cast("string")
+    if use_html:
+        extract = (
+            (*carried, extract_text_udf(F.col("html")).alias("_ex")),
+            (*carried, F.col("_ex.extracted").alias("extracted"),
+             F.col("_ex.error").alias("extract_error")),
+        )
+    else:
+        extract = ((*carried, F.col("text").alias("extracted"),
+                    null_str.alias("extract_error")),)
     err = F.col("extract_error").isNotNull()
-    combined = (
-        combined
-        .withColumn("gate_decision",
-                    F.when(err, F.lit(C.DECISION_ERROR))
-                    .otherwise(F.col("gate_decision")))
-        .withColumn("language",
-                    F.when(err, F.lit("none")).otherwise(F.col("language")))
-        .withColumn("probability",
-                    F.when(err, F.lit(None).cast("double"))
-                    .otherwise(F.col("probability")))
-        .withColumn("detection_method",
-                    F.when(err, F.lit(None).cast("string"))
-                    .otherwise(F.col("detection_method")))
-        .withColumn("keep", F.col("keep") & ~err)
-        .withColumn("drop_reason",
-                    F.when(err, F.lit(C.DROP_ERROR))
-                    .otherwise(F.col("drop_reason")))
-        .withColumn("gate_path",
-                    F.when(err, F.lit(C.GATE_PATH_UNKNOWN))
-                    .otherwise(F.col("gate_path")))
-        .withColumn("pipeline_mode",
-                    F.when(err, F.lit(C.PIPELINE_MODE_UNKNOWN))
-                    .otherwise(F.col("pipeline_mode")))
-    )
 
     # M6/X21: snippet scrub on kept en/fr rows only (runner.py:85-127) —
     # pure native regex chain, no Python.
@@ -438,21 +395,71 @@ def run_pipeline(
                   if carry_text else [])
     if carry_full:
         carry_cols.append(F.col("extracted_full"))
-    return combined.select(
-        *carried,
-        F.col("language"),
-        F.col("keep"),
-        F.col("drop_reason"),
-        F.col("gate_decision"),
-        F.col("detection_method"),
-        F.col("probability"),
-        F.when(wants_snippet, snippet).otherwise(F.lit("")).alias("scrubbed_text"),
-        F.col("gate_path"),
-        F.col("pipeline_mode"),
-        F.col("quality_fail_reason"),
-        (F.col("keep") & F.col("quality_fail_reason").isNull()).alias("final_keep"),
-        score_meta_struct().alias("score_meta"),
-        *carry_cols,
+    return SimpleNamespace(
+        valid=valid_input(),
+        invalid=~valid_input(),
+        invalid_cols=(*carried, null_str.alias("extracted")),
+        extract=extract,
+        bounded=(
+            *carried, F.col("quality_fail_reason"), F.col("extract_error"),
+            *([F.col("extracted").alias("extracted_full")]
+              if carry_full else []),
+            X.probe(F.col("extracted")).alias("extracted"),
+        ),
+        invalid_gate_cols=(
+            null_str.alias("quality_fail_reason"),
+            null_str.alias("extract_error"),
+            null_str.alias("gate_decision"),
+            F.lit("none").alias("language"),
+            F.lit(None).cast("double").alias("probability"),
+            null_str.alias("detection_method"),
+            F.lit(False).alias("use_vad"),
+            F.lit(0.0).alias("en_ratio"),
+            F.lit(0.0).alias("fr_ratio"),
+            F.lit(0).alias("token_count"),
+            F.lit(False).alias("music_only"),
+            F.lit(False).alias("mid_zone"),
+            F.lit(False).alias("keep"),
+            F.lit(C.DROP_INVALID_INPUT).alias("drop_reason"),
+            F.lit(C.GATE_PATH_UNKNOWN).alias("gate_path"),
+            F.lit(C.PIPELINE_MODE_UNKNOWN).alias("pipeline_mode"),
+            *([null_str.alias("extracted_full")] if carry_full else []),
+        ),
+        error_fold=(
+            ("gate_decision", F.when(err, F.lit(C.DECISION_ERROR))
+             .otherwise(F.col("gate_decision"))),
+            ("language", F.when(err, F.lit("none"))
+             .otherwise(F.col("language"))),
+            ("probability", F.when(err, F.lit(None).cast("double"))
+             .otherwise(F.col("probability"))),
+            ("detection_method", F.when(err, null_str)
+             .otherwise(F.col("detection_method"))),
+            ("keep", F.col("keep") & ~err),
+            ("drop_reason", F.when(err, F.lit(C.DROP_ERROR))
+             .otherwise(F.col("drop_reason"))),
+            ("gate_path", F.when(err, F.lit(C.GATE_PATH_UNKNOWN))
+             .otherwise(F.col("gate_path"))),
+            ("pipeline_mode", F.when(err, F.lit(C.PIPELINE_MODE_UNKNOWN))
+             .otherwise(F.col("pipeline_mode"))),
+        ),
+        output=(
+            *carried,
+            F.col("language"),
+            F.col("keep"),
+            F.col("drop_reason"),
+            F.col("gate_decision"),
+            F.col("detection_method"),
+            F.col("probability"),
+            F.when(wants_snippet, snippet).otherwise(F.lit(""))
+            .alias("scrubbed_text"),
+            F.col("gate_path"),
+            F.col("pipeline_mode"),
+            F.col("quality_fail_reason"),
+            (F.col("keep") & F.col("quality_fail_reason").isNull())
+            .alias("final_keep"),
+            score_meta_struct().alias("score_meta"),
+            *carry_cols,
+        ),
     )
 
 

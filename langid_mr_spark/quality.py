@@ -92,17 +92,25 @@ def with_quality(df, text_col: str, out_col: str = "quality_fail_reason",
     an inlined ``tokenize`` would re-split the text at nearly every metric
     reference: ~10 splits + 4 token-array HOF passes per passing document
     (staging made quality_flags 13× faster at sf1.0: 16.2 s → 1.2 s)."""
-    base = list(df.columns)
+    toked, metrics, verdict = _quality_stages(
+        tuple(df.columns), text_col, out_col, keep_metrics)
+    return df.select("*", *toked).select(*metrics).select(*verdict)
+
+
+@X.per_jvm
+def _quality_stages(base: tuple[str, ...], text_col: str, out_col: str,
+                    keep_metrics: bool):
+    """with_quality's three stage projections over ``base`` (built once
+    per JVM)."""
     text = F.col(text_col)
-    toked = df.select("*", X.tokenize(text).alias("_q_toks"))
+    keep_base = [F.col(c) for c in base]
     m = _metric_exprs(text, F.col("_q_toks"))
-    staged = toked.select(
-        *base, *[m[k].alias(f"_q_{k}") for k in METRIC_COLS])
+    metrics = (*keep_base, *[m[k].alias(f"_q_{k}") for k in METRIC_COLS])
     m_attr = {k: F.col(f"_q_{k}") for k in METRIC_COLS}
-    keep = ([F.col(f"_q_{k}").alias(k) for k in METRIC_COLS]
+    keep = ([m_attr[k].alias(k) for k in METRIC_COLS]
             if keep_metrics else [])
-    return staged.select(
-        *base, *keep, _fail_reason_from(m_attr).alias(out_col))
+    verdict = (*keep_base, *keep, _fail_reason_from(m_attr).alias(out_col))
+    return (X.tokenize(text).alias("_q_toks"),), metrics, verdict
 
 
 def quality_one(text: str | None) -> dict[str, Any]:

@@ -7,6 +7,8 @@
 - resumability: interrupted run + resume == uninterrupted run (D8)
 """
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,6 +166,57 @@ def test_resume_idempotent(spark, tmp_path):
     assert m.agg(F.sum("docs")).collect()[0][0] == 60
     kept = spark.read.parquet(out_b).filter(F.col("keep")).count()
     assert m.agg(F.sum("kept")).collect()[0][0] == kept
+
+
+def _crash_in_metrics_table(monkeypatch, out):
+    """Raise after the output write, before the _metrics write."""
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+    monkeypatch.setattr(pipeline, "metrics_table", crash)
+
+
+def _crash_in_checkpoint_append(monkeypatch, out):
+    """Raise after the output and _metrics writes, at the _checkpoints
+    append: a plain file holds the checkpoint table's path."""
+    Path(out + "_checkpoints").write_text("not a table")
+
+
+@pytest.mark.parametrize("inject", [_crash_in_metrics_table,
+                                    _crash_in_checkpoint_append],
+                         ids=["before_metrics", "before_checkpoint"])
+def test_resume_after_crash_before_checkpoint(spark, tmp_path, monkeypatch,
+                                              inject):
+    """A run that dies after its output write but before its _checkpoints
+    append is redone on resume with the same run_id: the output equals an
+    uninterrupted run's row for row, _metrics holds no duplicate
+    (dt, language, drop_reason) group and reconciles with the input, and
+    every date is checkpointed."""
+    inp = str(tmp_path / "in")
+    clean = str(tmp_path / "clean")
+    out = str(tmp_path / "out")
+    fixtures.corpus_df(spark, 60, num_partitions=2).write.parquet(inp)
+    dts = pipeline.run_resumable(spark, inp, clean, run_id="c")
+
+    with monkeypatch.context() as m:
+        inject(m, out)
+        with pytest.raises(Exception):
+            pipeline.run_resumable(spark, inp, out, run_id="k")
+    assert spark.read.parquet(out).count() == 60  # written before the crash
+    assert Path(out + "_metrics").exists() == (
+        inject is _crash_in_checkpoint_append)
+    Path(out + "_checkpoints").unlink(missing_ok=True)
+    assert pipeline.run_resumable(spark, inp, out, run_id="k") == dts
+
+    a, b = spark.read.parquet(clean), spark.read.parquet(out)
+    assert a.count() == b.count() == 60
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    metrics = spark.read.parquet(out + "_metrics")
+    assert metrics.count() == metrics.select(
+        "dt", "language", "drop_reason").distinct().count()
+    assert metrics.agg(F.sum("docs")).collect()[0][0] == 60
+    ckpt = spark.read.parquet(out + "_checkpoints")
+    assert sorted(str(r["dt"]) for r in ckpt.filter(F.col("run_id") == "k")
+                  .select("dt").distinct().collect()) == dts
 
 
 def test_resume_partitioned_input_uses_metadata(spark, tmp_path):

@@ -9,8 +9,10 @@
 - top-k compiles to TakeOrderedAndProject (no full sort)
 - the staged operator forms tokenize each document a bounded number of
   times (``split(lower(`` count) and run a bounded number of Python UDFs
+- a warm ``run_pipeline`` build makes a bounded number of py4j round trips
 """
 
+import collections
 import importlib.util
 import re
 from pathlib import Path
@@ -118,6 +120,32 @@ def test_pipeline_plan_budget(spark):
     plan = plan_of(out)
     assert plan.count("split(lower(") <= 5, plan
     assert plan.count("ArrowEvalPython") <= 13, plan
+
+
+def test_pipeline_build_round_trip_budget(spark, monkeypatch):
+    """The run_pipeline build reuses its stage expressions once per JVM: a
+    warm build (the second of the session) sends at most 1,000 py4j call
+    (``c``) and reflection (``r``) commands — 8,446 when every build made
+    its expressions anew. GC delete (``m``) commands are not counted: they
+    follow Python's garbage-collection timing."""
+    from py4j.clientserver import JavaClient
+    from py4j.java_gateway import GatewayClient
+
+    sent = collections.Counter()
+    for cls in (JavaClient, GatewayClient):
+        # only where the class defines it: wrapping an inherited method
+        # too would count each command twice
+        if "send_command" in vars(cls):
+            def counted(self, command, *args, _send=vars(cls)["send_command"],
+                        **kwargs):
+                sent[command[:1]] += 1
+                return _send(self, command, *args, **kwargs)
+            monkeypatch.setattr(cls, "send_command", counted)
+    src = fixtures.corpus_df(spark, 30)
+    pipeline.run_pipeline(src)
+    sent.clear()
+    pipeline.run_pipeline(src)
+    assert sent["c"] + sent["r"] <= 1000, dict(sent)
 
 
 @pytest.mark.parametrize("query,budget", [
